@@ -301,13 +301,7 @@ def index_raster(
         if cols:
             out = round_decimals(out, cols, decimals)
     if compact:
-        if dggs not in ("hex7", "s2", "geohash", "rhp", "i3h", "a5",
-                        "i4r", "i9r", "e4r", "e9r", "quadkey"):
-            raise ValueError(
-                "compact=True needs an id-arithmetic hierarchy "
-                "(hex7/s2/geohash/rhp/i3h/a5/i4r/i9r/e4r/e9r/quadkey; "
-                "maidenhead mixes 10/24-ary levels)"
-            )
+        from raster2dggs_spark.dggs import grid_lib
         from raster2dggs_spark.operators.compaction import (
             compact_cells, compact_cells_3h,
         )
@@ -318,8 +312,8 @@ def index_raster(
         # construction, so it is preserved (the reference compacts within
         # a parent partition for the same reason)
         src = out.drop("npx") if "npx" in out.columns else out
-        if dggs == "i3h":
-            # multi-parent route (A17): parent as a value column would
+        if grid_lib(dggs).parent_expr is None:
+            # multi-parent route (A17, i3h): parent as a value column would
             # block every vertex-child merge (its 3 parents differ) —
             # drop it and re-derive for the kept rows
             from raster2dggs_spark.operators.indexing import (

@@ -35,17 +35,15 @@ import sys
 import time
 
 
-GRIDS = ("hex7", "h3", "s2", "geohash", "maidenhead", "rhp", "i3h", "a5",
-         "quadkey",
-         "i4r", "i9r", "e4r", "e9r")
-
-
 def build_parser() -> argparse.ArgumentParser:
+    from raster2dggs_spark.dggs import GRIDS
+
     p = argparse.ArgumentParser(
         prog="raster2dggs_spark",
         description="Index a raster image table to DGGS cells (Spark).",
     )
-    p.add_argument("dggs", choices=GRIDS, help="DGGS grid (subcommand in "
+    p.add_argument("dggs", choices=(*GRIDS, "h3"),
+                   help="DGGS grid (subcommand in "
                    "the reference CLI; 'h3' is rejected with the hex7 "
                    "contract message)")
     p.add_argument("raster_input",

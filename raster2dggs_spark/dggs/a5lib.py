@@ -42,7 +42,7 @@ so ids can be NEGATIVE int64 (like i3h/s2): never use -1 sentinels
 against a5 ids (INT64_MIN-style unreachable values only).  Parent =
 zero the finest digit + decrement the res field: pure bit arithmetic,
 so Spark-side parent derivation stays a native Column expression
-(joins.parent_expr) with zero Python.
+(a5lib.parent_expr) with zero Python.
 """
 
 from __future__ import annotations
@@ -50,6 +50,12 @@ from __future__ import annotations
 import numpy as np
 
 MAX_RES = 27
+MIN_RES = 0
+PARENT_OFFSET = 8  # 4^8 = 65K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+COVER = "sample"
+COVER_HALO = 2.0
 _ENCODE_CHUNK = 8192
 _GOLD = (1.0 + np.sqrt(5.0)) / 2.0
 _SECTOR = 2.0 * np.pi / 5.0
@@ -330,8 +336,8 @@ def cell_to_boundary(cells):
 def cell_to_parent(cells, parent_res: int):
     """Pure bit arithmetic (nested hierarchy): zero the digits finer
     than ``parent_res`` (and the quintant when parent_res is 0) and
-    rewrite the res field.  The Column-expression twin lives in
-    joins.parent_expr."""
+    rewrite the res field.  The Column-expression twin is
+    :func:`parent_expr`."""
     c = np.asarray(cells, dtype=np.int64).ravel()
     res = (c >> np.int64(55)) & np.int64(0x1F)
     if np.any(parent_res > res):
@@ -339,6 +345,17 @@ def cell_to_parent(cells, parent_res: int):
     s = 55 if parent_res == 0 else 52 - 2 * (parent_res - 1)
     mask = np.int64(-(1 << s)) & ~_RES_MASK
     return ((c & mask) | np.int64(parent_res << 55)).astype(np.int64)
+
+
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent`: zero the digits finer than
+    parent_res (and the quintant when parent_res is 0), rewrite the
+    5-bit res field @55."""
+    from pyspark.sql import functions as F
+
+    s = 55 if parent_res == 0 else 52 - 2 * (parent_res - 1)
+    mask = (-(1 << s)) & ~(0x1F << 55)
+    return (c.bitwiseAND(F.lit(mask))).bitwiseOR(F.lit(parent_res << 55))
 
 
 def get_num_children(parent_res: int, child_res: int) -> int:
@@ -417,3 +434,12 @@ def cell_pitch_rad(res: int) -> float:
     if res <= 0:
         return 2.0 * _PENTA_INRADIUS_RAD
     return 2.0 * np.arctan(_TRI_INRADIUS * _DISTORT) / 2.0 ** (res - 1)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    # 12 pentagons; aperture 5 for res 0→1, aperture 4 thereafter
+    return 12 if res == 0 else 60 * 4 ** (res - 1)

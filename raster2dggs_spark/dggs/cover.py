@@ -2,10 +2,11 @@
 
 Reference parity: each indexer enumerates cells whose *center* falls in
 a WGS84 bbox (s2rasterindexer.py:88-134, geohashrasterindexer.py:87-119,
-rhprasterindexer.py cells_in_bbox).  One implementation serves all
-grids: dense lattice sampling at 0.35x the cell pitch (guarantees every
-center-inside cell is hit), encode, unique, strict center filter —
-h3lib.cover_bbox generalized.
+rhprasterindexer.py cells_in_bbox).  One implementation per cover kind
+(the grid module's ``COVER``): exact index enumeration on the lon/lat
+rectangle grids, and on the curved grids dense lattice sampling at 0.35x
+the cell pitch (guarantees every center-inside cell is hit), encode,
+unique, strict center filter.
 
 Antimeridian: bboxes crossing +-180 are expressed unwrapped
 (lon_max > 180); encodes are periodic and centers are unwrapped into the
@@ -16,31 +17,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from raster2dggs_spark.dggs import (
-    a5lib,
-    quadkeylib,
-    e4rlib,
-    e9rlib,
-    i4rlib,
-    i9rlib,
-    check_grid,
-    geohashlib,
-    h3lib,
-    i3hlib,
-    maidenheadlib,
-    rhplib,
-    s2lib,
-)
-
-
-def grid_lib(dggs: str):
-    """The backend module for a grid key (encode/decode/parents)."""
-    check_grid(dggs)
-    return {"hex7": h3lib, "s2": s2lib, "geohash": geohashlib,
-            "maidenhead": maidenheadlib, "rhp": rhplib,
-            "i3h": i3hlib, "a5": a5lib, "i4r": i4rlib,
-            "i9r": i9rlib, "e4r": e4rlib, "e9r": e9rlib,
-            "quadkey": quadkeylib}[dggs]
+from raster2dggs_spark.dggs import grid_lib
 
 
 def wrap_lon(lon):
@@ -57,134 +34,117 @@ def wrap_lon(lon):
 
 def encode(lon, lat, res: int, dggs: str):
     lib = grid_lib(dggs)
-    lon = wrap_lon(lon)
-    if dggs == "hex7":
-        return lib.latlng_to_cell(lon, lat, res)
-    return lib.lonlat_to_cell(lon, lat, res)
+    return lib.lonlat_to_cell(wrap_lon(lon), lat, res)
 
 
 def cell_center(cells, dggs: str):
-    lib = grid_lib(dggs)
-    if dggs == "hex7":
-        return lib.cell_to_latlng(cells)
-    return lib.cell_to_lonlat(cells)
+    return grid_lib(dggs).cell_to_lonlat(cells)
 
 
 def cell_parent(cells, parent_res: int, dggs: str):
     return grid_lib(dggs).cell_to_parent(cells, parent_res)
 
 
+def cell_children(cells, child_res: int, dggs: str):
+    """All descendants at ``child_res`` of same-resolution ``cells`` —
+    the grid's one-level ``cell_to_children`` applied level by level;
+    flat, cell-major, coarser digits first."""
+    lib = grid_lib(dggs)
+    cells = np.asarray(cells, dtype=np.int64).ravel()
+    if cells.size == 0:
+        return cells
+    res = lib.get_resolution(cells)
+    r0 = int(res[0])
+    if np.any(res != r0):
+        raise ValueError("cell_children needs one input resolution")
+    if child_res < r0:
+        raise ValueError("child_res coarser than cell res")
+    for _ in range(r0, child_res):
+        cells = lib.cell_to_children(cells).ravel()
+    return cells
+
+
 def cell_spans(res: int, dggs: str) -> tuple[float, float]:
     """(lon_span, lat_span) in degrees for the FIXED-degree-rectangle
-    grids (geohash/maidenhead) — the single source of the bit/radix
-    allocation shared by pitch_deg and the kNN banded disk cover."""
-    if dggs == "geohash":
-        lon_bits = (5 * res + 1) // 2
-        lat_bits = 5 * res // 2
-        return 360.0 / (1 << lon_bits), 180.0 / (1 << lat_bits)
-    if dggs == "maidenhead":
-        prod = 1
-        for b in maidenheadlib.BASES[:res]:
-            prod *= b
-        return 360.0 / prod, 180.0 / prod
-    raise ValueError(f"{dggs} cells are not lon/lat rectangles")
+    grids (geohash/maidenhead)."""
+    lib = grid_lib(dggs)
+    spans = None if lib.COVER == "sample" else lib.cell_spans(res)
+    if spans is None:
+        raise ValueError(f"{dggs} cells are not lon/lat rectangles")
+    return spans
 
 
 def pitch_deg(res: int, dggs: str) -> float:
     """Conservative cell pitch (the smaller cell dimension) in degrees."""
-    if dggs == "hex7":
-        return float(np.degrees(h3lib.cell_pitch_rad(res)))
-    if dggs == "s2":
-        return 90.0 / (1 << res)
-    if dggs == "rhp":
-        return float(np.degrees(rhplib.cell_pitch_rad(res)))
-    if dggs == "i3h":
-        return float(np.degrees(i3hlib.cell_pitch_rad(res)))
-    if dggs == "a5":
-        return float(np.degrees(a5lib.cell_pitch_rad(res)))
-    if dggs == "i4r":
-        return float(np.degrees(i4rlib.cell_pitch_rad(res)))
-    if dggs == "i9r":
-        return float(np.degrees(i9rlib.cell_pitch_rad(res)))
-    if dggs == "e4r":
-        return float(np.degrees(e4rlib.cell_pitch_rad(res)))
-    if dggs == "e9r":
-        return float(np.degrees(e9rlib.cell_pitch_rad(res)))
-    if dggs in ("geohash", "maidenhead"):
-        return min(cell_spans(res, dggs))
-    if dggs == "quadkey":
-        # constant lon span; lat span is latitude-dependent (max 360/n
-        # at the equator, ->0 near ±85°).  This is the EQUATORIAL span:
-        # fine for margin inflation (conservative-large), and covers
-        # never sample quadkey (exact enumeration fast path above).
-        return 360.0 / (1 << res)
-    raise ValueError(dggs)
+    return grid_lib(dggs).pitch_deg(res)
+
+
+def _keep_centers(cand, lon_min, lat_min, lon_max, lat_max, dggs: str):
+    """Exact center-in-bbox filter, centers unwrapped into the bbox
+    longitude frame (F14: a ±180-crossing bbox lives in the unwrapped
+    frame, lon_max > 180 allowed)."""
+    clon, clat = cell_center(cand, dggs)
+    mid = 0.5 * (lon_min + lon_max)
+    clon = clon + 360.0 * np.round((mid - clon) / 360.0)
+    keep = ((clon >= lon_min) & (clon < lon_max)
+            & (clat >= lat_min) & (clat < lat_max))
+    return cand[keep]
 
 
 def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int,
                dggs: str = "hex7", max_samples: int = 4_000_000):
     """All cells (any grid) whose center lies in [lon_min,lon_max) x
     [lat_min,lat_max) — reference cells_in_bbox semantics."""
-    if dggs == "hex7":  # keeps h3lib's tuned lattice
-        return h3lib.cover_bbox(lon_min, lat_min, lon_max, lat_max, res,
-                                max_samples=max_samples)
-    if dggs == "quadkey":
-        # EXACT enumeration — tiles are an analytic lon x Mercator-lat
-        # lattice, no density sampling needed (and the degree pitch is
-        # latitude-dependent, so sampling would be wrong near ±85°)
-        n = 1 << res
-        # unwrapped frame: enumerate raw column indices then wrap mod n
-        cx0 = int(np.floor((lon_min + 180.0) / 360.0 * n)) - 1
-        cx1 = int(np.floor((lon_max + 180.0) / 360.0 * n)) + 1
-        _, ty0 = quadkeylib._tile_xy(np.array([0.0]),
-                                     np.array([lat_max]), res)
-        _, ty1 = quadkeylib._tile_xy(np.array([0.0]),
-                                     np.array([lat_min]), res)
+    lib = grid_lib(dggs)
+    if lib.COVER != "sample":
+        # EXACT enumeration — the cells are an analytic lon x lat (or
+        # Mercator-lat) lattice: index ranges ±1, no density sampling
+        # (and quadkey's degree pitch is latitude-dependent, so
+        # sampling would be wrong near ±85°)
+        nx, ny = lib.lattice_shape(res)
+        # unwrapped frame: enumerate raw column indices then wrap mod nx
+        cx0 = int(np.floor((lon_min + 180.0) / 360.0 * nx)) - 1
+        cx1 = int(np.floor((lon_max + 180.0) / 360.0 * nx)) + 1
+        rows = np.clip(np.floor(lib.row_of_lat(
+            np.array([lat_min, lat_max]), res)), 0, ny - 1).astype(np.int64)
         txs = np.arange(cx0, cx1 + 1, dtype=np.int64)
-        tys = np.arange(max(0, int(ty0[0]) - 1),
-                        min(n - 1, int(ty1[0]) + 1) + 1, dtype=np.int64)
+        tys = np.arange(max(0, int(rows.min()) - 1),
+                        min(ny - 1, int(rows.max()) + 1) + 1, dtype=np.int64)
         if txs.size * tys.size > max_samples:
             raise ValueError(
                 f"bbox cover at res {res} needs {txs.size * tys.size} "
                 "tiles > cap; use a coarser res or split the bbox")
-        gx = np.repeat(np.mod(txs, n), tys.size)
-        gy = np.tile(tys, txs.size)
-        cand = np.unique(
-            (quadkeylib._morton(gy, gx, res) << 5) | np.int64(res))
-        clon, clat = cell_center(cand, dggs)
-        mid = 0.5 * (lon_min + lon_max)
-        clon = clon + 360.0 * np.round((mid - clon) / 360.0)
-        keep = ((clon >= lon_min) & (clon < lon_max)
-                & (clat >= lat_min) & (clat < lat_max))
-        return cand[keep]
-    # curved grids at coarse res: projection distortion shrinks the
-    # worst-case cell inradius well below the nominal pitch (the hex7
-    # round-4 battery measured ~0.25× at res ≤ 3) — sample denser
-    # there; rectangle grids are exact at every res
-    f = 0.35
-    if dggs in ("s2", "rhp", "i3h", "a5", "i4r", "i9r", "e4r",
-                "e9r") and res <= 3:
-        f = 0.18
-    step = pitch_deg(res, dggs) * f
+        cand = np.unique(lib.cell_from_indices(
+            np.repeat(np.mod(txs, nx), tys.size), np.tile(tys, txs.size),
+            res))
+        return _keep_centers(cand, lon_min, lat_min, lon_max, lat_max, dggs)
+    # Guaranteed-density lattice sampling.  A hierarchical children-
+    # expansion cover (coarse cover → bit expansion → exact filter,
+    # prototyped round 4 on hex7) was REJECTED: the curved encoders are
+    # not canonical near icosahedron face seams — one physical cell can
+    # carry two ids (one per adjacent face, each owning part of it), so
+    # the cover's id universe is the ENCODER IMAGE, and only sampling at
+    # guaranteed density enumerates it; the bit-tree ancestor of a seam
+    # id can itself be a sliver id no coarse cover finds (~1 cell per
+    # 10⁵ silently lost — tests/test_cover.py pins the battery).
+    # Coarse res: projection distortion shrinks the worst-case cell
+    # inradius well below the nominal pitch (the hex7 round-4 battery
+    # measured ~0.25× at res ≤ 3) — sample denser there.
+    f = 0.18 if res <= 3 else 0.35
+    step = lib.pitch_deg(res) * f
     lat_lo = max(-90.0, lat_min - step)
     lat_hi = min(90.0, lat_max + step)
-    if dggs in ("geohash", "maidenhead"):
-        # cells are lon/lat rectangles with CONSTANT lon width in
-        # degrees — never stretch the lon step
-        lon_step = step
+    # cell lon extent in degrees is ~pitch/cos(lat), narrowest at the
+    # lowest |lat| in the bbox — stretch by that cos (conservative at
+    # every other latitude; the extreme lat instead skips whole cell
+    # columns on the equatorial side of a wide-lat bbox)
+    if lat_lo <= 0.0 <= lat_hi:
+        coslat = 1.0
     else:
-        # quasi-equal-area grids (s2/rhp): cell lon extent in degrees is
-        # ~pitch/cos(lat), narrowest at the lowest |lat| in the bbox —
-        # stretch by that cos (conservative at every other latitude;
-        # the extreme lat instead skips whole cell columns on the
-        # equatorial side of a wide-lat bbox)
-        if lat_lo <= 0.0 <= lat_hi:
-            coslat = 1.0
-        else:
-            coslat = max(
-                0.05, float(np.cos(np.radians(min(abs(lat_lo), abs(lat_hi)))))
-            )
-        lon_step = step / coslat
+        coslat = max(
+            0.05, float(np.cos(np.radians(min(abs(lat_lo), abs(lat_hi)))))
+        )
+    lon_step = step / coslat
     lons = np.arange(lon_min - lon_step, lon_max + 2 * lon_step, lon_step)
     lats = np.arange(lat_lo, lat_hi + step, step)
     if lons.size * lats.size > max_samples:
@@ -197,9 +157,4 @@ def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int,
     # wrap samples into valid ranges for the encode (periodic in lon)
     wlon = np.mod(glon + 180.0, 360.0) - 180.0
     cand = np.unique(encode(wlon, np.clip(glat, -90.0, 90.0), res, dggs))
-    clon, clat = cell_center(cand, dggs)
-    mid = 0.5 * (lon_min + lon_max)
-    clon = clon + 360.0 * np.round((mid - clon) / 360.0)
-    keep = ((clon >= lon_min) & (clon < lon_max)
-            & (clat >= lat_min) & (clat < lat_max))
-    return cand[keep]
+    return _keep_centers(cand, lon_min, lat_min, lon_max, lat_max, dggs)

@@ -19,9 +19,19 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._bits import compress, spread
+
 _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 _B32_INV = {c: i for i, c in enumerate(_B32)}
 MAX_PRECISION = 12
+MAX_RES = MAX_PRECISION
+MIN_RES = 1
+PARENT_OFFSET = 3  # 32^3 = 33K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+COVER = "lattice"
+COVER_HALO = 2.0
+LEVEL_BITS = 5  # one base-32 character per level
 
 
 def lonlat_to_cell(lon_deg, lat_deg, precision: int):
@@ -43,8 +53,6 @@ def lonlat_to_cell(lon_deg, lat_deg, precision: int):
     # (dggs/_bits.py) replaces the former per-bit loop bit-identically:
     # for even nbits lon bit m (from the LSB) lands at 2m+1, for odd
     # nbits at 2m (and lat at the complementary parity).
-    from raster2dggs_spark.dggs._bits import spread
-
     sx, sy = spread(ix), spread(iy)
     if nbits % 2 == 0:
         bits = (sx << np.uint64(1)) | sy
@@ -62,8 +70,6 @@ def cell_from_indices(ix, iy, precision: int):
     nbits = 5 * precision
     nlon = (nbits + 1) // 2
     nlat = nbits // 2
-    from raster2dggs_spark.dggs._bits import spread
-
     ix = np.asarray(ix, dtype=np.uint64).ravel()
     iy = np.asarray(iy, dtype=np.uint64).ravel()
     sx, sy = spread(ix), spread(iy)
@@ -80,6 +86,30 @@ def get_precision(cells):
     return (c & np.uint64(0xF)).astype(np.int64)
 
 
+get_resolution = get_precision
+
+
+def lattice_shape(precision):
+    """(nx, ny) lon/lat quantizer extents: 5p bits, lon takes the extra."""
+    nbits = 5 * precision
+    return 1 << ((nbits + 1) // 2), 1 << (nbits // 2)
+
+
+def cell_spans(precision: int) -> tuple[float, float]:
+    """(lon_span, lat_span) of a cell in degrees."""
+    nx, ny = lattice_shape(precision)
+    return 360.0 / nx, 180.0 / ny
+
+
+def row_of_lat(lat, precision: int):
+    """Continuous lat-quantizer coordinate (row ``iy`` spans [iy, iy+1))."""
+    return (np.asarray(lat, dtype=np.float64) + 90.0) / cell_spans(precision)[1]
+
+
+def lat_of_row(v, precision: int):
+    return np.asarray(v, dtype=np.float64) * cell_spans(precision)[1] - 90.0
+
+
 def cell_to_parent(cells, parent_precision: int):
     """Drop trailing characters — prefix truncation exactly as the
     reference does (geohashrasterindexer.py:58-65)."""
@@ -92,30 +122,69 @@ def cell_to_parent(cells, parent_precision: int):
     return ((bits << np.uint64(4)) | np.uint64(parent_precision)).astype(np.int64)
 
 
-def cell_to_lonlat(cells):
-    """Bbox-center lon/lat of packed geohash ids (vectorized)."""
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent` (prefix truncation); needs
+    ``from_res``, the cells' uniform precision."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("geohash parent_expr needs from_res")
+    drop = 5 * (from_res - parent_res)
+    bits = F.shiftrightunsigned(c, 4 + drop)
+    return F.shiftleft(bits, 4).bitwiseOR(F.lit(parent_res))
+
+
+def cell_to_children(cells):
+    """(n, 32) direct children: append one base-32 character."""
+    c = np.asarray(cells, dtype=np.int64).ravel()
+    p1 = get_precision(c) + 1
+    if p1.size and int(p1.max()) > MAX_PRECISION:
+        raise ValueError("children would exceed MAX_RES")
+    kids = ((c >> 4)[:, None] << 5) | np.arange(32, dtype=np.int64)[None, :]
+    return (kids << 4) | p1[:, None]
+
+
+def get_num_children(parent_res: int, child_res: int) -> int:
+    return 32 ** (child_res - parent_res)
+
+
+def pitch_deg(precision: int) -> float:
+    return min(cell_spans(precision))
+
+
+def n_cells(precision: int) -> int:
+    # known defect: S2's count, not geohash's 32^p — the resolution
+    # auto-modes size geohash levels by it
+    return 6 * 4**precision
+
+
+def cell_to_indices(cells):
+    """(ix, iy) lon/lat quantizer indices of packed ids — the inverse of
+    :func:`cell_from_indices` (magic-mask compress of the interleave)."""
     c = np.asarray(cells).astype(np.uint64).ravel()
     p = get_precision(c)
-    out_lon = np.empty(c.shape[0])
-    out_lat = np.empty(c.shape[0])
+    ix = np.empty(c.shape[0], dtype=np.int64)
+    iy = np.empty(c.shape[0], dtype=np.int64)
     for prec in np.unique(p):
         m = p == prec
-        nbits = int(5 * prec)
-        nlon = (nbits + 1) // 2
-        nlat = nbits // 2
-        from raster2dggs_spark.dggs._bits import compress
-
-        bits = (c[m] >> np.uint64(4)).astype(np.uint64)
-        # inverse of the encode parity rule (magic-mask compress)
-        if nbits % 2 == 0:
-            ix = compress(bits >> np.uint64(1))
-            iy = compress(bits)
+        bits = c[m] >> np.uint64(4)
+        # inverse of the encode parity rule
+        if (5 * prec) % 2 == 0:
+            ix[m] = compress(bits >> np.uint64(1))
+            iy[m] = compress(bits)
         else:
-            ix = compress(bits)
-            iy = compress(bits >> np.uint64(1))
-        out_lon[m] = (ix.astype(np.float64) + 0.5) / (1 << nlon) * 360.0 - 180.0
-        out_lat[m] = (iy.astype(np.float64) + 0.5) / (1 << nlat) * 180.0 - 90.0
-    return out_lon, out_lat
+            ix[m] = compress(bits)
+            iy[m] = compress(bits >> np.uint64(1))
+    return ix, iy
+
+
+def cell_to_lonlat(cells):
+    """Bbox-center lon/lat of packed geohash ids (vectorized)."""
+    ix, iy = cell_to_indices(cells)
+    nx, ny = lattice_shape(get_precision(np.asarray(cells).ravel()))
+    lon = (ix.astype(np.float64) + 0.5) / nx * 360.0 - 180.0
+    lat = (iy.astype(np.float64) + 0.5) / ny * 180.0 - 90.0
+    return lon, lat
 
 
 def cells_to_string(cells):
@@ -143,25 +212,40 @@ def strings_to_cells(strs):
     return out
 
 
-def cell_pitch_deg(precision: int) -> float:
-    """Approx cell height in degrees (lat extent)."""
-    nlat = (5 * precision) // 2
-    return 180.0 / (1 << nlat)
+def cell_to_boundary(cells):
+    """(vlon, vlat) (n, 4) exact rectangle corners from center ± span/2,
+    spans per each cell's own packed precision (compacted frames mix
+    precisions)."""
+    return _rect_boundary(cells, get_precision, cell_to_lonlat, cell_spans)
+
+
+def _rect_boundary(cells, get_res, center, spans):
+    c = np.asarray(cells, dtype=np.int64)
+    res_of = get_res(c)
+    lon, lat = center(c)
+    vlon = np.empty((c.shape[0], 4), dtype=np.float64)
+    vlat = np.empty((c.shape[0], 4), dtype=np.float64)
+    for r in np.unique(res_of):
+        m = res_of == r
+        w, h = spans(int(r))
+        vlon[m] = lon[m, None] + np.array(
+            [-w / 2, w / 2, w / 2, -w / 2])[None, :]
+        vlat[m] = lat[m, None] + np.array(
+            [-h / 2, -h / 2, h / 2, h / 2])[None, :]
+    return vlon, vlat
 
 
 def cell_area_m2(cells, radius_m: float = 6371007.1809):
     """EXACT per-cell spherical areas: geohash cells are lon/lat
     rectangles, so area = R² · Δλ · (sin φ_top − sin φ_bottom) —
     closed form, per each cell's own packed precision."""
-    from raster2dggs_spark.dggs import cover
-
     c = np.asarray(cells, dtype=np.int64)
     lon, lat = cell_to_lonlat(c)
     p = get_precision(c)
     out = np.empty(c.shape[0], dtype=np.float64)
     for pr in np.unique(p):
         m = p == pr
-        w, h = cover.cell_spans(int(pr), "geohash")
+        w, h = cell_spans(int(pr))
         top = np.radians(np.minimum(lat[m] + h / 2.0, 90.0))
         bot = np.radians(np.maximum(lat[m] - h / 2.0, -90.0))
         out[m] = np.radians(w) * (np.sin(top) - np.sin(bot))

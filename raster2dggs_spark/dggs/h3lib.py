@@ -32,6 +32,12 @@ from __future__ import annotations
 import numpy as np
 
 MAX_RES = 15
+MIN_RES = 0
+PARENT_OFFSET = 6  # 7^6 ≈ 117K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+COVER = "sample"
+COVER_HALO = 1.5  # pitches bounding a hex circumradius (~0.58 pitch)
 
 # --- published H3 constants (faceijk.c / constants.h) -----------------
 M_SIN60 = np.sqrt(3.0) / 2.0
@@ -104,11 +110,6 @@ _DIGIT_CW = np.array([0, 3, 6, 2, 5, 1, 4], dtype=np.int64)
 # --- bit layout (exact H3) --------------------------------------------
 _MODE_CELL = np.uint64(1)
 _H3_INIT = np.uint64(0x08001FFFFFFFFFFF)  # mode=1, res=0, bc=0, digits=7
-
-
-def _pos_angle(a):
-    tau = 2.0 * np.pi
-    return np.mod(np.mod(a, tau) + tau, tau)
 
 
 def _geo_azimuth(lat1, lon1, lat2, lon2):
@@ -411,6 +412,14 @@ def cell_pitch_rad(res: int) -> float:
     return float(np.arctan(RES0_U_GNOMONIC) / M_SQRT7**res)
 
 
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    return 122 * 7**res  # uniformly 7-ary over 122 base cells
+
+
 # --- forward: lonlat -> cell -------------------------------------------
 
 
@@ -673,6 +682,11 @@ def cell_to_boundary(cells):
     return np.degrees(vlon), np.degrees(vlat)
 
 
+# the grid contract's lon-first names (h3's are lat/lng-worded)
+lonlat_to_cell = latlng_to_cell
+cell_to_lonlat = cell_to_latlng
+
+
 def get_resolution(cells):
     c = np.asarray(cells).astype(np.uint64)
     return ((c >> np.uint64(52)) & np.uint64(0xF)).astype(np.int64)
@@ -699,6 +713,18 @@ def cell_to_parent(cells, parent_res):
     return (h | mask).astype(np.int64)
 
 
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent`: set the res nibble, fill
+    the finer digits with 7."""
+    from pyspark.sql import functions as F
+
+    res_mask = ~(0xF << 52)  # python int; fits int64
+    fill = (1 << (3 * (MAX_RES - parent_res))) - 1
+    return (c.bitwiseAND(F.lit(res_mask))).bitwiseOR(
+        F.lit(parent_res << 52)
+    ).bitwiseOR(F.lit(fill))
+
+
 def cell_to_center_child(cells, child_res: int):
     c = np.asarray(cells).astype(np.uint64)
     res = get_resolution(c)
@@ -723,53 +749,27 @@ def children_size(cells, child_res: int):
     return np.int64(7) ** (np.int64(child_res) - res)
 
 
-def cell_to_children(cells, child_res: int):
-    """All 7^(child_res−res) children of each cell (uniform 7-ary tree —
-    the hex7 contract, so no pentagon digit-1 exclusions).  Input cells
-    must share one resolution; output is ordered cell-major then
-    digit-pattern ascending."""
-    c = np.asarray(cells).astype(np.uint64)
+def cell_to_children(cells):
+    """(n, 7) direct children of same-resolution cells (uniform 7-ary
+    tree — the hex7 contract, so no pentagon digit-1 exclusions): clear
+    the next digit, bump the res nibble, OR in digit 0..6."""
+    c = np.asarray(cells, dtype=np.int64).ravel()
     if c.size == 0:
-        return c.astype(np.int64)
-    res = get_resolution(c)
-    r0 = int(res.ravel()[0])
-    if np.any(res != r0):
-        raise ValueError("cell_to_children needs uniform input res")
-    dr = int(child_res) - r0
-    if dr < 0:
-        raise ValueError("child_res coarser than cell res")
-    if dr == 0:
-        return np.asarray(cells).astype(np.int64)
-    base = (c & ~(np.uint64(0xF) << np.uint64(52))) | (
-        np.uint64(child_res) << np.uint64(52)
-    )
-    # clear the (all-7 in the parent id) digits r0+1..child_res
-    clear_bits = np.uint64(3 * (MAX_RES - int(child_res)))
-    mask = ((np.uint64(1) << np.uint64(3 * dr)) - np.uint64(1)) << clear_bits
-    base = base & ~mask
-    # pack every base-7 digit pattern at the cleared positions
-    digs = np.arange(7 ** dr, dtype=np.uint64)
-    pat = np.zeros_like(digs)
-    tmp = digs.copy()
-    for i in range(dr):
-        shift = np.uint64(3 * (MAX_RES - (int(child_res) - i)))
-        pat |= (tmp % np.uint64(7)) << shift
-        tmp //= np.uint64(7)
-    return (base[:, None] | pat[None, :]).ravel().astype(np.int64)
+        return np.empty((0, 7), dtype=np.int64)
+    res = (c >> 52) & 0xF  # ids are positive: bit 63 is always 0
+    r1 = int(res[0]) + 1
+    if np.any(res != r1 - 1):
+        raise ValueError("hex7 children need one input resolution")
+    if r1 > MAX_RES:
+        raise ValueError("children would exceed MAX_RES")
+    shift = 3 * (MAX_RES - r1)
+    base = ((c & ~np.int64(0xF << 52) & ~np.int64(7 << shift))
+            | np.int64(r1 << 52))
+    return base[:, None] | (np.arange(7, dtype=np.int64) << shift)[None, :]
 
 
-def is_pentagon(cells):
-    c = np.asarray(cells).astype(np.uint64)
-    bc = get_base_cell(c)
-    res = get_resolution(c)
-    pent = _BASE_IS_PENT[bc]
-    # pentagon cell = pentagon base cell with all-zero digits
-    allzero = np.ones_like(pent, dtype=bool)
-    for rr in range(1, MAX_RES + 1):
-        shift = np.uint64(3 * (MAX_RES - rr))
-        dig = ((c >> shift) & np.uint64(7)).astype(np.int64)
-        allzero &= (dig == 0) | (rr > res)
-    return pent & allzero
+def get_num_children(parent_res: int, child_res: int) -> int:
+    return 7 ** (child_res - parent_res)
 
 
 def is_valid_cell(cells):
@@ -804,77 +804,13 @@ def _sample_cover(lon_pts, lat_pts, res: int):
     return np.unique(cells)
 
 
-def _filter_centers(cand, lon_min, lat_min, lon_max, lat_max):
-    """Exact center-in-bbox filter, centers unwrapped into the bbox
-    longitude frame (F14: a ±180-crossing bbox lives in the unwrapped
-    frame, lon_max > 180 allowed)."""
-    clon, clat = cell_to_latlng(cand)
-    mid = 0.5 * (lon_min + lon_max)
-    clon = clon + 360.0 * np.round((mid - clon) / 360.0)
-    keep = (clon >= lon_min) & (clon < lon_max) & (clat >= lat_min) & (clat < lat_max)
-    return cand[keep]
-
-
-def _dense_cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int,
-                      max_samples: int):
-    """Dense lattice sampling at 0.35× cell pitch (guarantees every
-    center-inside cell is hit) → encode + unique + center filter.
-
-    res ≤ 3 samples at 0.18× pitch instead: gnomonic distortion at
-    coarse res shrinks the worst-case cell inradius to ~0.25× pitch
-    (measured), putting 0.35 past the √2·r_min hit guarantee — the
-    round-4 dense-vs-hierarchical battery caught real missed cells at
-    res 2-3.  Coarse res has few cells globally, so the 3.8× extra
-    samples are cheap."""
-    pitch_deg = np.degrees(cell_pitch_rad(res)) * (0.35 if res >= 4 else 0.18)
-    lat_lo = max(-90.0, lat_min - pitch_deg)
-    lat_hi = min(90.0, lat_max + pitch_deg)
-    # cells keep ~constant physical size, so their lon extent in degrees
-    # is ~pitch/cos(lat): within the bbox they are NARROWEST at the
-    # lowest |lat| — stretch the lon step by that cos (conservative for
-    # every other latitude row; using the extreme lat instead skips
-    # whole cell columns near the equatorial side of a wide-lat bbox)
-    if lat_lo <= 0.0 <= lat_hi:
-        coslat = 1.0
-    else:
-        coslat = max(0.05, np.cos(np.radians(min(abs(lat_lo), abs(lat_hi)))))
-    lon_step = pitch_deg / coslat
-    lons = np.arange(lon_min - lon_step, lon_max + 2 * lon_step, lon_step)
-    lats = np.arange(lat_lo, lat_hi + pitch_deg, pitch_deg)
-    if lons.size * lats.size > max_samples:
-        raise ValueError(
-            f"bbox cover at res {res} needs {lons.size * lats.size} samples > cap; "
-            "use a coarser res or split the bbox"
-        )
-    glon = np.repeat(lons, lats.size)
-    glat = np.tile(lats, lons.size)
-    cand = _sample_cover(glon, glat, res)
-    return _filter_centers(cand, lon_min, lat_min, lon_max, lat_max)
-
-
 def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int, max_samples: int = 4_000_000):
-    """All cells whose *center* lies in the bbox (reference semantics:
-    cells_in_bbox post-filters centers strictly inside — e.g.
-    /root/reference/raster2dggs/indexers/s2rasterindexer.py:127-134).
+    """All cells whose *center* lies in the bbox — the grid-generic
+    guaranteed-density sampler (``cover.cover_bbox``) on this grid."""
+    from raster2dggs_spark.dggs import cover
 
-    Guaranteed-density lattice sampling (``_dense_cover_bbox``).  A
-    hierarchical children-expansion variant (coarse cover → 7-ary bit
-    expansion → exact filter, prototyped round 4) was REJECTED: the
-    encoder is not canonical near icosahedron face seams — one physical
-    hex can carry two ids (one per adjacent face, each owning part of
-    the hex), so the cover's id universe is the ENCODER IMAGE, and only
-    sampling at guaranteed density enumerates it; the bit-tree ancestor
-    of a seam id can itself be a sliver id that no coarse cover finds
-    (~1 cell per 10⁵ silently lost).  The battery that caught this
-    (randomized uniform/pole/antimeridian bboxes vs a 3× denser
-    reference) is pinned in tests/test_cover.py.
-
-    Antimeridian: a bbox crossing ±180 is expressed in the *unwrapped*
-    frame (lon_max > 180 allowed, e.g. 175..185); the encode is periodic
-    and centers are unwrapped into the bbox frame before filtering
-    (reference F14 semantics, overlay.py:111-123)."""
-    return _dense_cover_bbox(lon_min, lat_min, lon_max, lat_max, res,
-                             max_samples)
+    return cover.cover_bbox(lon_min, lat_min, lon_max, lat_max, res,
+                            "hex7", max_samples=max_samples)
 
 
 def cell_area_m2(cells, radius_m: float = 6371007.1809):

@@ -59,6 +59,12 @@ from raster2dggs_spark.dggs.h3lib import (
 )
 
 MAX_RES = 29
+MIN_RES = 0
+PARENT_OFFSET = 10  # 3^10 ≈ 59K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+COVER = "sample"
+COVER_HALO = 2.0
 SQRT3 = np.sqrt(3.0)
 # "no parent" sentinel: valid ids occupy the full int64 range (face >= 16
 # sets the sign bit), so -1 would collide — INT64_MIN is unreachable
@@ -266,9 +272,23 @@ def cell_pitch_rad(res: int) -> float:
     return float(np.arctan(RES0_U_GNOMONIC) / SQRT3 ** res)
 
 
-def cell_to_lonlat(cells):
-    """Registry alias (cover.cell_center contract)."""
-    return cell_to_latlng(cells)
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    # aperture 3 over hex7's res-0 lattice density (~122 res-0 cells)
+    return 122 * 3**res
+
+
+cell_to_lonlat = cell_to_latlng
+
+# multi-parent hierarchy: vertex children are shared by 3 parents, so
+# there is no single nesting arity (A17 compaction handles it), and the
+# centroid parent is hex rounding — no native Column twin, parents are
+# derived by a vectorized UDF over cell_to_parent
+get_num_children = None
+parent_expr = None
 
 
 def cell_to_parent(cells, parent_res: int):

@@ -37,6 +37,12 @@ from __future__ import annotations
 import numpy as np
 
 MAX_RES = 26
+MIN_RES = 0
+PARENT_OFFSET = 8  # 4^8 = 65K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+COVER = "sample"
+COVER_HALO = 2.0
 _ENCODE_CHUNK = 8192
 _GOLD = (1.0 + np.sqrt(5.0)) / 2.0
 
@@ -138,6 +144,14 @@ _PITCH0_RAD = float(np.arctan(_pitch0()))
 
 def cell_pitch_rad(res: int) -> float:
     return _PITCH0_RAD / 2.0 ** max(res, 0)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    return 10 * 4 ** res  # 10 icosahedral diamonds, aperture 4
 
 
 def pack(diamond, res: int, row, col):
@@ -255,6 +269,23 @@ def cell_to_parent(cells, parent_res: int):
         sh = int(r) - parent_res
         out[m] = pack(d[m], parent_res, row[m] >> sh, col[m] >> sh)
     return out
+
+
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent`: per-axis right shift of
+    the 26-bit row/col fields; needs ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("i4r parent_expr needs from_res")
+    sh = from_res - parent_res
+    row = F.shiftrightunsigned(c, 26).bitwiseAND(F.lit(0x3FFFFFF))
+    col = c.bitwiseAND(F.lit(0x3FFFFFF))
+    head = c.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
+        F.lit(parent_res << 52))
+    return head.bitwiseOR(
+        F.shiftleft(F.shiftrightunsigned(row, sh), 26)
+    ).bitwiseOR(F.shiftrightunsigned(col, sh))
 
 
 def cell_to_children(cells):

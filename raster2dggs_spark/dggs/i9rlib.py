@@ -11,9 +11,9 @@ arithmetic from bit shifts to base-3 digits.
 Id: int64, always positive — diamond:4 bits @57 | res:5 @52 |
 row:26 @26 | col:26 @0.  3^16 < 2^26, so MAX_RES = 16.
 
-Parent/child are integer div/mod by powers of 3 — NOT a Column bit
-expression like i4r, but still exact int64 arithmetic, so the Spark
-side uses the same vectorized-NumPy parent UDF path as rhp and A16
+Parent/child are integer div/mod by powers of 3 — NOT a bit shift like
+i4r, but still exact int64 arithmetic, so the Spark-side parent is a
+native floor-div Column (``parent_expr``, the rhp pattern) and A16
 compaction applies unchanged (9-ary expected counts).
 """
 
@@ -33,11 +33,25 @@ from raster2dggs_spark.dggs.i4rlib import (
 )
 
 MAX_RES = 16
+MIN_RES = 0
+PARENT_OFFSET = 5  # 9^5 ≈ 59K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+COVER = "sample"
+COVER_HALO = 2.0
 _ENCODE_CHUNK = 8192
 
 
 def cell_pitch_rad(res: int) -> float:
     return _PITCH0_RAD / 3.0 ** max(res, 0)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    return 10 * 9 ** res  # 10 icosahedral diamonds, aperture 9
 
 
 def get_resolution(cells):
@@ -86,6 +100,24 @@ def cell_to_parent(cells, parent_res: int):
         div = 3 ** (int(r) - parent_res)
         out[m] = pack(d[m], parent_res, row[m] // div, col[m] // div)
     return out
+
+
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent`: per-axis floor-div of the
+    26-bit row/col fields by 3^k (values < 2^26, so the double floor-div
+    is exact); needs ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("i9r parent_expr needs from_res")
+    div = 3 ** (from_res - parent_res)
+    row = F.shiftrightunsigned(c, 26).bitwiseAND(F.lit(0x3FFFFFF))
+    col = c.bitwiseAND(F.lit(0x3FFFFFF))
+    head = c.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
+        F.lit(parent_res << 52))
+    return head.bitwiseOR(
+        F.shiftleft(F.floor(row / F.lit(div)).cast("long"), 26)
+    ).bitwiseOR(F.floor(col / F.lit(div)).cast("long"))
 
 
 def cell_to_children(cells):

@@ -17,17 +17,22 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs.geohashlib import _rect_boundary
+
 BASES = (18, 10, 24, 10, 24)
 MAX_PRECISION = 5
+MAX_RES = MAX_PRECISION
+MIN_RES = 1
+PARENT_OFFSET = 2
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+# exact rectangle enumeration, but the mixed-radix digit peel rounds per
+# level, so floor(frac * prod(bases)) can disagree with the encoder on
+# boundary-grazing spans: not a "lattice" grid
+COVER = "rect"
+COVER_HALO = 2.0
 _FIELD = "ABCDEFGHIJKLMNOPQR"
 _SUB = "abcdefghijklmnopqrstuvwx"
-
-
-def _pair_product(precision: int) -> int:
-    p = 1
-    for b in BASES[:precision]:
-        p *= b * b
-    return p
 
 
 def lonlat_to_cell(lon_deg, lat_deg, precision: int):
@@ -73,6 +78,32 @@ def get_precision(cells):
     return (np.asarray(cells, dtype=np.int64) & 0xF)
 
 
+get_resolution = get_precision
+
+
+def lattice_shape(precision: int):
+    """(nx, ny): both axes split into prod(BASES[:precision]) steps."""
+    n = 1
+    for b in BASES[:precision]:
+        n *= b
+    return n, n
+
+
+def cell_spans(precision: int) -> tuple[float, float]:
+    """(lon_span, lat_span) of a cell in degrees."""
+    n = lattice_shape(precision)[0]
+    return 360.0 / n, 180.0 / n
+
+
+def row_of_lat(lat, precision: int):
+    """Continuous row coordinate (row ``iy`` spans [iy, iy+1))."""
+    return (np.asarray(lat, dtype=np.float64) + 90.0) / cell_spans(precision)[1]
+
+
+def lat_of_row(v, precision: int):
+    return np.asarray(v, dtype=np.float64) * cell_spans(precision)[1] - 90.0
+
+
 def _unpack(cells):
     c = np.asarray(cells, dtype=np.int64).ravel()
     prec = c & 0xF
@@ -90,6 +121,52 @@ def cell_to_parent(cells, parent_precision: int):
         m = prec > lvl
         out = np.where(m, out // (b * b), out)
     return (out << 4) | parent_precision
+
+
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent` (floor-div by the dropped
+    pairs' base products); needs ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("maidenhead parent_expr needs from_res")
+    prod = 1
+    for b in BASES[parent_res:from_res]:
+        prod *= b * b
+    # max packed value (18·10·24·10·24)² < 2^53 → double floor-div exact
+    bits = F.shiftrightunsigned(c, 4)
+    return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
+        F.lit(parent_res)
+    )
+
+
+def cell_to_children(cells):
+    """(n, b²) direct children: mixed-radix append of the next pair
+    (b = 10 or 24), so input cells must share one precision."""
+    bits, prec = _unpack(cells)
+    if prec.size == 0:
+        return np.empty((0, 0), dtype=np.int64)
+    p = int(prec[0])
+    if np.any(prec != p):
+        raise ValueError("maidenhead children need one input precision")
+    if p >= MAX_PRECISION:
+        raise ValueError("children would exceed MAX_RES")
+    b = BASES[p]
+    kids = bits[:, None] * (b * b) + np.arange(b * b, dtype=np.int64)[None, :]
+    return (kids << 4) | (p + 1)
+
+
+get_num_children = None  # arity alternates 100 / 576 per level
+
+
+def pitch_deg(precision: int) -> float:
+    return min(cell_spans(precision))
+
+
+def n_cells(precision: int) -> int:
+    # known defect: S2's count, not maidenhead's prod(b²) — the
+    # resolution auto-modes size maidenhead levels by it
+    return 6 * 4**precision
 
 
 def cell_to_lonlat(cells):
@@ -166,18 +243,22 @@ def strings_to_cells(strs):
     return out
 
 
+def cell_to_boundary(cells):
+    """(vlon, vlat) (n, 4) exact rectangle corners, per each cell's own
+    packed precision."""
+    return _rect_boundary(cells, get_precision, cell_to_lonlat, cell_spans)
+
+
 def cell_area_m2(cells, radius_m: float = 6371007.1809):
     """EXACT per-cell spherical areas (lon/lat rectangles):
     R² · Δλ · (sin φ_top − sin φ_bottom) per packed precision."""
-    from raster2dggs_spark.dggs import cover
-
     c = np.asarray(cells, dtype=np.int64)
     lon, lat = cell_to_lonlat(c)
     p = (c & 0xF).astype(np.int64)
     out = np.empty(c.shape[0], dtype=np.float64)
     for pr in np.unique(p):
         m = p == pr
-        w, h = cover.cell_spans(int(pr), "maidenhead")
+        w, h = cell_spans(int(pr))
         top = np.radians(np.minimum(lat[m] + h / 2.0, 90.0))
         bot = np.radians(np.maximum(lat[m] - h / 2.0, -90.0))
         out[m] = np.radians(w) * (np.sin(top) - np.sin(bot))

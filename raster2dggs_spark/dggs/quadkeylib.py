@@ -29,22 +29,51 @@ from __future__ import annotations
 
 import numpy as np
 
+from raster2dggs_spark.dggs._bits import compress, spread
+
 MAX_LEVEL = 23
 MAX_LAT = 85.05112878
 EARTH_R = 6_371_007.1809
+MAX_RES = MAX_LEVEL
+MIN_RES = 1
+PARENT_OFFSET = 8  # 4^8 = 65K subcells per parent partition
+AREA_FRACTION = float(np.sin(np.radians(MAX_LAT)))  # the Mercator band
+AREA_BY_RES = False
+COVER = "lattice"
+COVER_HALO = 2.0
+LEVEL_BITS = 2  # one base-4 digit per level
+
+
+def lattice_shape(level):
+    return 1 << level, 1 << level
+
+
+def row_of_lat(lat, level: int):
+    """Continuous Mercator row coordinate (row 0 at the north edge);
+    latitudes beyond ±MAX_LAT clamp into the edge rows."""
+    phi = np.radians(np.clip(lat, -MAX_LAT, MAX_LAT))
+    return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi))
+            / np.pi) / 2.0 * (1 << level)
+
+
+def lat_of_row(v, level: int):
+    """Inverse of :func:`row_of_lat`; the edge rows absorb the
+    |lat| > MAX_LAT clamp, so their outer edges extend to the poles."""
+    nq = 1 << level
+    out = np.degrees(np.arctan(np.sinh(
+        np.pi * (1.0 - 2.0 * np.asarray(v, np.float64) / nq))))
+    out = np.where(np.asarray(v) <= 0, 90.0, out)
+    return np.where(np.asarray(v) >= nq, -90.0, out)
 
 
 def _tile_xy(lon_deg, lat_deg, level: int):
     """Slippy-scheme tile indices (vectorized, clipped into the grid)."""
     n = 1 << level
     lon = np.asarray(lon_deg, dtype=np.float64).ravel()
-    lat = np.clip(np.asarray(lat_deg, dtype=np.float64).ravel(),
-                  -MAX_LAT, MAX_LAT)
+    lat = np.asarray(lat_deg, dtype=np.float64).ravel()
     fx = (lon + 180.0) / 360.0
-    phi = np.radians(lat)
-    fy = (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi)) / np.pi) / 2.0
     tx = np.clip(np.floor(fx * n), 0, n - 1).astype(np.int64)
-    ty = np.clip(np.floor(fy * n), 0, n - 1).astype(np.int64)
+    ty = np.clip(np.floor(row_of_lat(lat, level)), 0, n - 1).astype(np.int64)
     return tx, ty
 
 
@@ -52,14 +81,10 @@ def _morton(ty, tx, level: int):
     """Interleave (ty, tx) bits, y high — the base-4 quadkey digits.
     Magic-mask spread (dggs/_bits.py): 5 passes per axis instead of 4
     per BIT — bit-identical to the former per-bit loop."""
-    from raster2dggs_spark.dggs._bits import spread
-
     return ((spread(ty) << np.uint64(1)) | spread(tx)).astype(np.int64)
 
 
 def _demorton(bits, level: int):
-    from raster2dggs_spark.dggs._bits import compress
-
     b = np.asarray(bits).astype(np.uint64)
     return (compress(b).astype(np.int64),
             compress(b >> np.uint64(1)).astype(np.int64))
@@ -80,6 +105,9 @@ def tile_to_cell(tx, ty, level: int):
     tx = np.asarray(tx, dtype=np.int64).ravel()
     ty = np.asarray(ty, dtype=np.int64).ravel()
     return (_morton(ty, tx, level) << 5) | np.int64(level)
+
+
+cell_from_indices = tile_to_cell
 
 
 def get_resolution(cells):
@@ -106,6 +134,11 @@ def cell_to_tile(cells):
     return tx, ty, lvl
 
 
+def cell_to_indices(cells):
+    """(tx, ty) slippy tile indices (inverse of ``cell_from_indices``)."""
+    return cell_to_tile(cells)[:2]
+
+
 def cell_to_parent(cells, parent_level: int):
     bits, lvl = _unpack(cells)
     if np.any(parent_level > lvl):
@@ -114,23 +147,44 @@ def cell_to_parent(cells, parent_level: int):
     return ((bits >> drop) << 5) | np.int64(parent_level)
 
 
-def cell_to_children(cells, child_level: int):
-    """All 4^(child−level) children, cell-major, digit ascending (flat,
-    uniform count — the h3lib children contract)."""
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent` (drop trailing base-4
+    digits); needs ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("quadkey parent_expr needs from_res")
+    drop = 2 * (from_res - parent_res)
+    bits = F.shiftrightunsigned(c, 5 + drop)
+    return F.shiftleft(bits, 5).bitwiseOR(F.lit(parent_res))
+
+
+def cell_to_children(cells):
+    """(n, 4) direct children, digit ascending."""
     bits, lvl = _unpack(cells)
-    if bits.size == 0:
-        return np.asarray(cells, dtype=np.int64)
-    l0 = int(lvl[0])
-    if np.any(lvl != l0):
-        raise ValueError("cell_to_children needs uniform input level")
-    dl = int(child_level) - l0
-    if dl < 0:
-        raise ValueError("child_level coarser than cell level")
-    if child_level > MAX_LEVEL:
-        raise ValueError(f"level 1..{MAX_LEVEL}")
-    pat = np.arange(4 ** dl, dtype=np.int64)
-    kids = (bits[:, None] << (2 * dl)) | pat[None, :]
-    return ((kids << 5) | np.int64(child_level)).ravel()
+    if lvl.size and int(lvl.max()) >= MAX_LEVEL:
+        raise ValueError("children would exceed MAX_RES")
+    kids = (bits[:, None] << 2) | np.arange(4, dtype=np.int64)[None, :]
+    return (kids << 5) | (lvl + 1)[:, None]
+
+
+def get_num_children(parent_res: int, child_res: int) -> int:
+    return 4 ** (child_res - parent_res)
+
+
+def cell_spans(level: int):
+    """None: Mercator rows are not a fixed number of degrees."""
+    return None
+
+
+def pitch_deg(level: int) -> float:
+    # constant lon span; the lat span shrinks toward ±85° — this is
+    # the EQUATORIAL span, conservative-large for margin inflation
+    return 360.0 / (1 << level)
+
+
+def n_cells(level: int) -> int:
+    return 4**level  # covers |lat| <= MAX_LAT only (AREA_FRACTION)
 
 
 def cell_to_lonlat(cells):

@@ -32,6 +32,12 @@ import numpy as np
 
 FACES = "NOPQRS"
 MAX_RES = 15
+MIN_RES = 0
+PARENT_OFFSET = 5  # 9^5 ≈ 59K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = True  # equal-area: cell_area_m2 takes a res, not cells
+COVER = "sample"
+COVER_HALO = 2.0
 NORTH_SQUARE = 0  # rhealpixdggs default (0, 0) layout
 SOUTH_SQUARE = 0
 
@@ -212,15 +218,31 @@ def cell_to_parent(cells, parent_res: int):
     return (out << 4) | parent_res
 
 
-def cell_to_children(cells, res: int):
-    """Direct 9 children (res -> res+1) — pure id arithmetic."""
-    bits, _ = _unpack(cells)
-    kids = (bits[:, None] * 9 + np.arange(9, dtype=np.int64)[None, :]).ravel()
-    return (kids << 4) | (res + 1)
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent`; needs ``from_res``."""
+    from pyspark.sql import functions as F
+
+    if from_res is None:
+        raise ValueError("rhp parent_expr needs from_res")
+    prod = 9 ** (from_res - parent_res)
+    # 6*9^15 < 2^53 -> double floor-div exact
+    bits = F.shiftrightunsigned(c, 4)
+    return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
+        F.lit(parent_res)
+    )
 
 
-def children_size(res: int, child_res: int) -> int:
-    return 9 ** (child_res - res)
+def cell_to_children(cells):
+    """(n, 9) direct children — base-9 digit append."""
+    bits, res = _unpack(cells)
+    if res.size and int(res.max()) >= MAX_RES:
+        raise ValueError("children would exceed MAX_RES")
+    kids = bits[:, None] * 9 + np.arange(9, dtype=np.int64)[None, :]
+    return (kids << 4) | (res + 1)[:, None]
+
+
+def get_num_children(parent_res: int, child_res: int) -> int:
+    return 9 ** (child_res - parent_res)
 
 
 def cell_to_face_uv(cells):
@@ -275,6 +297,14 @@ def cell_area_m2(res: int, radius_m: float = 6371007.1809) -> float:
 def cell_pitch_rad(res: int) -> float:
     """Angular size of a cell edge at ``res`` (plane edge pi/2 / 3^res)."""
     return float(_HALF / 3 ** res)
+
+
+def pitch_deg(res: int) -> float:
+    return float(np.degrees(cell_pitch_rad(res)))
+
+
+def n_cells(res: int) -> int:
+    return 6 * 9**res
 
 
 def cells_to_string(cells):

@@ -16,6 +16,13 @@ from __future__ import annotations
 import numpy as np
 
 MAX_LEVEL = 30
+MAX_RES = MAX_LEVEL
+MIN_RES = 0
+PARENT_OFFSET = 8  # 4^8 = 65K subcells per parent partition
+AREA_FRACTION = 1.0
+AREA_BY_RES = False
+COVER = "sample"
+COVER_HALO = 2.0  # s2 cells distort up to ~1.4x the nominal edge
 _LOOKUP_BITS = 4
 _SWAP_MASK = 1
 _INVERT_MASK = 2
@@ -185,6 +192,40 @@ def cell_level(cell):
     low = (c & (~c + np.uint64(1))).astype(np.float64)  # lowest set bit (exact pow2)
     tz = np.round(np.log2(low)).astype(np.int64)
     return MAX_LEVEL - (tz >> 1)
+
+
+get_resolution = cell_level
+
+
+def parent_expr(c, parent_res: int, from_res: int | None = None):
+    """Column twin of :func:`cell_to_parent`: (id & -lsb) | lsb."""
+    from pyspark.sql import functions as F
+
+    lsb = 1 << (2 * (30 - parent_res))
+    return (c.bitwiseAND(F.lit(-lsb))).bitwiseOR(F.lit(lsb))
+
+
+def cell_to_children(cells):
+    """(n, 4) direct children: ``id + {-3,-1,1,3}·(lsb>>2)`` (standard
+    S2 id arithmetic), ascending."""
+    c = np.asarray(cells, dtype=np.int64).ravel()
+    if (c & 1).any():
+        raise ValueError("children would exceed MAX_RES")
+    q = (c & -c) >> 2
+    offs = np.array([-3, -1, 1, 3], dtype=np.int64)
+    return c[:, None] + offs[None, :] * q[:, None]
+
+
+def get_num_children(parent_res: int, child_res: int) -> int:
+    return 4 ** (child_res - parent_res)
+
+
+def pitch_deg(res: int) -> float:
+    return 90.0 / (1 << res)
+
+
+def n_cells(res: int) -> int:
+    return 6 * 4**res
 
 
 def cell_to_lonlat(cell):

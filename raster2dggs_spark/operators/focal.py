@@ -83,8 +83,11 @@ def lattice_indices(cells_df: DataFrame, cell_col: str = "cell",
     rectangle-grid id — for geohash, gx = floor((lon+180)/360 * 2^nlon)
     exactly as the encoder quantized it (dggs/geohashlib.py:37-40),
     recovered by bit de-interleave; for quadkey the slippy (tx, ty)
-    tile indices (dggs/quadkeylib.py).  One narrow Arrow pass."""
-    if dggs not in ("geohash", "quadkey"):
+    tile indices (dggs/quadkeylib.py) — the grid's ``cell_to_indices``.
+    One narrow Arrow pass."""
+    from raster2dggs_spark.dggs import grid_lib
+
+    if grid_lib(dggs).COVER != "lattice":
         raise ValueError(f"lattice focal: geohash | quadkey, got {dggs!r}")
     out_schema = T.StructType(
         list(cells_df.schema.fields)
@@ -93,53 +96,22 @@ def lattice_indices(cells_df: DataFrame, cell_col: str = "cell",
            T.StructField("gprec", T.LongType(), False)])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import geohashlib, quadkeylib
+        from raster2dggs_spark.dggs import grid_lib
 
+        lib = grid_lib(dggs)
         for pdf in batches:
             if not len(pdf):
                 continue
-            if dggs == "quadkey":
-                c = pdf[cell_col].values.astype(np.int64)
-                lvl = quadkeylib.get_resolution(c)
-                if len(np.unique(lvl)) > 1:
-                    raise ValueError("mixed quadkey levels in focal input")
-                tx, ty, _ = quadkeylib.cell_to_tile(c)
-                pdf = pdf.copy()
-                pdf["gx"] = tx
-                pdf["gy"] = ty
-                pdf["gprec"] = np.int64(int(lvl[0]))
-                yield pdf
-                continue
-            c = pdf[cell_col].values.astype(np.uint64)
-            p = geohashlib.get_precision(c)
+            c = pdf[cell_col].values.astype(np.int64)
+            p = lib.get_resolution(c)
             if len(np.unique(p)) > 1:
-                raise ValueError("mixed geohash precisions in focal input")
-            prec = int(p[0])
-            nbits = 5 * prec
-            nlon = (nbits + 1) // 2
-            nlat = nbits // 2
-            bits = c >> np.uint64(4)
-            gx = np.zeros(c.shape[0], dtype=np.uint64)
-            gy = np.zeros(c.shape[0], dtype=np.uint64)
-            for k in range(nbits):
-                b = (bits >> np.uint64(nbits - 1 - k)) & np.uint64(1)
-                if k % 2 == 0:
-                    gx |= b << np.uint64(nlon - 1 - k // 2)
-                else:
-                    gy |= b << np.uint64(nlat - 1 - k // 2)
+                raise ValueError(f"mixed {dggs} resolutions in focal input")
             pdf = pdf.copy()
-            pdf["gx"] = gx.astype(np.int64)
-            pdf["gy"] = gy.astype(np.int64)
-            pdf["gprec"] = np.int64(prec)
+            pdf["gx"], pdf["gy"] = lib.cell_to_indices(c)
+            pdf["gprec"] = np.int64(int(p[0]))
             yield pdf
 
     return cells_df.mapInPandas(fn, out_schema)
-
-
-def geohash_lattice_indices(cells_df: DataFrame, cell_col: str = "cell",
-                            ) -> DataFrame:
-    """Back-compat alias of :func:`lattice_indices` for geohash."""
-    return lattice_indices(cells_df, cell_col, "geohash")
 
 
 def focal_lattice(cells_df: DataFrame, value_cols: list[str], k: int = 1,
@@ -158,15 +130,7 @@ def focal_lattice(cells_df: DataFrame, value_cols: list[str], k: int = 1,
     if k < 1:
         raise ValueError("k >= 1 required")
     g = lattice_indices(cells_df, cell_col, dggs)
-    if dggs == "quadkey":
-        wlon = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(gprec AS INT))")
-        wlat = wlon
-    else:
-        # lattice extents 2^nlon x 2^nlat, nlon = (5p+1)//2, nlat = 5p//2
-        wlon = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                      "CAST((5 * gprec + 1) DIV 2 AS INT))")
-        wlat = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                      "CAST((5 * gprec) DIV 2 AS INT))")
+    wlon, wlat = _lattice_extent_exprs(dggs)
     seq = F.sequence(F.lit(-k), F.lit(k))
     scat = (g
             .withColumn("dx", F.explode(seq))
@@ -185,15 +149,16 @@ def focal_lattice(cells_df: DataFrame, value_cols: list[str], k: int = 1,
 
 
 def _lattice_extent_exprs(dggs: str):
-    """(wlon, wlat) lattice extents as native Columns (shared by
-    focal_lattice and the Moran operators)."""
-    if dggs == "quadkey":
-        wlon = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(gprec AS INT))")
-        return wlon, wlon
+    """(wlon, wlat) lattice extents 2^nlon x 2^nlat as native Columns of
+    ``gprec`` (shared by focal_lattice and the Moran operators): with
+    b = LEVEL_BITS id bits per level, nlon = (b*p+1)//2, nlat = b*p//2."""
+    from raster2dggs_spark.dggs import grid_lib
+
+    b = grid_lib(dggs).LEVEL_BITS
     wlon = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                  "CAST((5 * gprec + 1) DIV 2 AS INT))")
+                  f"CAST(({b} * gprec + 1) DIV 2 AS INT))")
     wlat = F.expr("shiftleft(CAST(1 AS BIGINT), "
-                  "CAST((5 * gprec) DIV 2 AS INT))")
+                  f"CAST(({b} * gprec) DIV 2 AS INT))")
     return wlon, wlat
 
 
@@ -658,21 +623,17 @@ def morphology_cells(cells_df: DataFrame, op: str = "dilate", k: int = 1,
         T.StructField("gprec", T.LongType(), False)])
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.dggs import geohashlib, quadkeylib
+        from raster2dggs_spark.dggs import grid_lib
 
+        lib = grid_lib(dggs)
         for pdf in batches:
             if not len(pdf):
                 continue
             prec = pdf["gprec"].values
             if len(np.unique(prec)) > 1:
                 raise ValueError("mixed precisions in morphology input")
-            p = int(prec[0])
-            if dggs == "quadkey":
-                ids = quadkeylib.tile_to_cell(pdf["gx"].values,
-                                              pdf["gy"].values, p)
-            else:
-                ids = geohashlib.cell_from_indices(pdf["gx"].values,
-                                                   pdf["gy"].values, p)
+            ids = lib.cell_from_indices(pdf["gx"].values, pdf["gy"].values,
+                                        int(prec[0]))
             yield pd.DataFrame({"cell": ids, "gx": pdf["gx"].values,
                                 "gy": pdf["gy"].values,
                                 "gprec": pdf["gprec"].values})

@@ -70,76 +70,17 @@ def _point_segment_dist_deg(lon, lat, x1, y1, x2, y2):
     return np.sqrt(ex * ex + ey * ey)
 
 
-def _pitch_deg(res: int, dggs: str) -> float:
-    from raster2dggs_spark.dggs import cover
-
-    return cover.pitch_deg(res, dggs)
-
-
 def _cells_children(cells, res: int, dggs: str):
-    """All direct children of ``cells`` (at ``res``) — pure id arithmetic.
+    """All direct children of ``cells`` (at ``res``), flat — the grid's
+    one-level id arithmetic (``cell_to_children``)."""
+    from raster2dggs_spark.dggs import grid_lib
 
-    hex7: uniform 7-ary digit tree (clear the res-(res+1) digit, bump the
-    res nibble, OR in digit 0..6).  S2: the 4 children ids are
-    ``id + {-3,-1,1,3}·(lsb>>2)`` (standard S2 id arithmetic).  rhp:
-    base-9 append.  geohash: 5-bit append (32 children)."""
-    cells = np.asarray(cells, dtype=np.int64)
-    if dggs == "hex7":
-        r1 = res + 1
-        shift = 3 * (15 - r1)
-        base = (
-            (cells & ~np.int64(0xF << 52) & ~np.int64(7 << shift))
-            | np.int64(r1 << 52)
-        )
-        digits = (np.arange(7, dtype=np.int64) << shift)
-        return (base[:, None] | digits[None, :]).ravel()
-    if dggs == "rhp":
-        from raster2dggs_spark.dggs import rhplib
-
-        return rhplib.cell_to_children(cells, res)
-    if dggs == "geohash":
-        bits = cells >> 4
-        kids = ((bits[:, None] << 5)
-                | np.arange(32, dtype=np.int64)[None, :]).ravel()
-        return (kids << 4) | (res + 1)
-    if dggs == "s2":
-        lsb = cells & -cells
-        q = lsb >> 2
-        offs = np.array([-3, -1, 1, 3], dtype=np.int64)
-        return (cells[:, None] + offs[None, :] * q[:, None]).ravel()
-    if dggs == "maidenhead":
-        from raster2dggs_spark.dggs.maidenheadlib import BASES
-
-        b = BASES[res]  # next pair's base; children = b^2 mixed-radix append
-        bits = cells >> 4
-        kids = (bits[:, None] * (b * b)
-                + np.arange(b * b, dtype=np.int64)[None, :]).ravel()
-        return (kids << 4) | (res + 1)
-    if dggs == "a5":
-        from raster2dggs_spark.dggs import a5lib
-
-        return a5lib.cell_to_children(cells).ravel()
-    if dggs == "i4r":
-        from raster2dggs_spark.dggs import i4rlib
-
-        return i4rlib.cell_to_children(cells).ravel()
-    if dggs == "i9r":
-        from raster2dggs_spark.dggs import i9rlib
-
-        return i9rlib.cell_to_children(cells).ravel()
-    if dggs == "e4r":
-        from raster2dggs_spark.dggs import e4rlib
-
-        return e4rlib.cell_to_children(cells).ravel()
-    if dggs == "e9r":
-        from raster2dggs_spark.dggs import e9rlib
-
-        return e9rlib.cell_to_children(cells).ravel()
-    if dggs == "quadkey":
-        from raster2dggs_spark.dggs import quadkeylib
-
-        return quadkeylib.cell_to_children(cells, res + 1).ravel()
-    raise ValueError(f"children arithmetic not implemented for {dggs!r}")
+    lib = grid_lib(dggs)
+    if lib.parent_expr is None:
+        raise ValueError(
+            f"{dggs!r} children are shared between parents, not a "
+            "partition: no descendant cover")
+    return lib.cell_to_children(cells).ravel()
 
 
 def _centers_edge_dist(cells, vx, vy, dggs: str):
@@ -174,27 +115,27 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
     O(area-in-cells + perimeter·depth) — a continent at res 9 no longer
     samples a dense O((extent/pitch)²) lattice (the flat version's
     failure mode at scale)."""
-    from raster2dggs_spark.dggs import cover
+    from raster2dggs_spark.dggs import cover, grid_lib
 
+    lib = grid_lib(dggs)
     vx = np.asarray(vx, dtype=np.float64)
     vy = np.asarray(vy, dtype=np.float64)
     lon_min, lon_max = vx.min(), vx.max()
     lat_min, lat_max = vy.min(), vy.max()
     extent = max(lon_max - lon_min, lat_max - lat_min)
-    # halo multiple of pitch that bounds a cell circumradius (hex:
-    # ~0.58·pitch; s2 cells distort up to ~1.4× the nominal edge)
-    halo = 1.5 if dggs == "hex7" else 2.0
+    # halo multiple of pitch that bounds a cell circumradius
+    halo = lib.COVER_HALO
     # edge distances are measured in raw lon/lat degrees, but a cell's
     # lon extent grows by 1/cos(lat) — scale the descent margins so a
     # "deep interior" verdict holds for every descendant at any latitude
     maxlat = min(89.0, max(abs(lat_min), abs(lat_max)))
     distort = 1.0 / max(0.1, float(np.cos(np.radians(maxlat))))
     r0 = res
-    while r0 > 0 and extent / (0.35 * _pitch_deg(r0, dggs)) > _SEED_MAX:
+    while r0 > 0 and extent / (0.35 * lib.pitch_deg(r0)) > _SEED_MAX:
         r0 -= 1
 
     # --- seed: dense-but-bounded lattice at r0 -------------------------
-    pitch0 = _pitch_deg(r0, dggs)
+    pitch0 = lib.pitch_deg(r0)
     step = pitch0 * 0.35
     pad = pitch0
     lons = np.arange(lon_min - pad, lon_max + pad + step, step)
@@ -218,7 +159,7 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
     # --- descend: boundary cells refine, interior cells expand ---------
     interior_pool: list[tuple[np.ndarray, int]] = []
     for r in range(r0, res):
-        pitch_r = _pitch_deg(r, dggs)
+        pitch_r = lib.pitch_deg(r)
         center_in, mind = _centers_edge_dist(cells, vx, vy, dggs)
         # descendants of a cell wander up to ~1.2 pitch from its center
         # (circumradius + aperture-7/4 center drift), times the lon
@@ -237,7 +178,7 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
     # distances are raw degrees but a cell's lon extent is ~pitch/cos(lat),
     # so without it a high-latitude edge-straddling cell could be marked
     # interior and skip the exact raycast
-    pitch_deg = _pitch_deg(res, dggs)
+    pitch_deg = lib.pitch_deg(res)
     if cells.size:
         center_in, mind = _centers_edge_dist(cells, vx, vy, dggs)
         interior = center_in & (mind > 1.3 * distort * pitch_deg)
@@ -251,9 +192,7 @@ def polygon_cover_cells(vx, vy, res: int, dggs: str = "hex7"):
 
     # expand the interior pool to res-level descendants (id arithmetic)
     for pool_cells, r in interior_pool:
-        c = pool_cells
-        for rr in range(r, res):
-            c = _cells_children(c, rr, dggs)
+        c = cover.cell_children(pool_cells, res, dggs)
         out_cells.append(c)
         out_int.append(np.ones(c.shape[0], dtype=bool))
         out_cin.append(np.ones(c.shape[0], dtype=bool))
@@ -334,6 +273,20 @@ def _ragged(lo: np.ndarray, hi: np.ndarray):
     return idx, np.repeat(lo, counts) + seq
 
 
+def _lattice_axes(dggs: str, res: int):
+    """(u(lon), v(lat), nx, ny, from_indices) of a power-of-two
+    ``"lattice"`` grid: its continuous index space (lon linear, lat
+    through the grid's own ``row_of_lat``).  u = frac * 2^k is EXACT
+    scaling, so floor(u) is bit-identical to the encoder's quantizer."""
+    from raster2dggs_spark.dggs import grid_lib
+
+    lib = grid_lib(dggs)
+    nx, ny = lib.lattice_shape(res)
+    return (lambda lon: (lon + 180.0) / 360.0 * nx,
+            lambda lat: lib.row_of_lat(lat, res), nx, ny,
+            lambda ix, iy: lib.cell_from_indices(ix, iy, res))
+
+
 def polygon_fill_cells(polys: DataFrame, res: int, dggs: str = "hex7",
                        id_col: str = "poly_id", xs_col: str = "xs",
                        ys_col: str = "ys") -> DataFrame:
@@ -341,24 +294,24 @@ def polygon_fill_cells(polys: DataFrame, res: int, dggs: str = "hex7",
     vector2dggs polygon semantics; ref `common.py` cell-enumeration
     capability generalized from bboxes to arbitrary rings).
 
-    - **Rectangle grids (quadkey / geohash): EXACT scanline.**  The ring
-      maps into the grid's continuous tile space (lon linear; quadkey's
-      N-S axis through Mercator ``fy`` — edges are straight lines of
-      the grid's own planar space), each tile-row center's edge
+    - **Power-of-two lattice grids (``COVER == "lattice"``: quadkey /
+      geohash): EXACT scanline.**  The ring maps into the grid's
+      continuous tile space (lon linear; quadkey's N-S axis through
+      Mercator ``fy`` — edges are straight lines of the grid's own
+      planar space), each tile-row center's edge
       crossings are enumerated analytically (half-open even-odd rule),
       and crossings pair left/right into spans of interior centers.
       Nothing sampled, nothing missed.
-    - **Curved grids**: the guaranteed-density cover machinery
+    - **Other grids**: the guaranteed-density cover machinery
       (``polygon_cells``) filtered to center-in rows; edges are
       straight in lon/lat there (documented contract difference).
 
     Scale shape: one narrow ``mapInPandas`` — a polygon is scanned,
     paired and expanded entirely inside its task, vectorized across the
     batch's edges; no shuffle, no cross-task state."""
-    from raster2dggs_spark.dggs import check_grid
+    from raster2dggs_spark.dggs import grid_lib
 
-    check_grid(dggs)
-    if dggs not in ("quadkey", "geohash"):
+    if grid_lib(dggs).COVER != "lattice":
         return (polygon_cells(polys, res, dggs)
                 .where(F.col("center_in"))
                 .select(F.col("poly_id").alias(id_col), "cell"))
@@ -368,31 +321,8 @@ def polygon_fill_cells(polys: DataFrame, res: int, dggs: str = "hex7",
         T.StructField("cell", T.LongType(), False),
     ])
 
-    def _axes():
-        if dggs == "quadkey":
-            from raster2dggs_spark.dggs import quadkeylib
-
-            n = 1 << res
-
-            def fy(lat):
-                phi = np.radians(np.clip(lat, -quadkeylib.MAX_LAT,
-                                         quadkeylib.MAX_LAT))
-                return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi))
-                        / np.pi) / 2.0
-
-            return (lambda lon: (lon + 180.0) / 360.0 * n,
-                    lambda lat: fy(lat) * n, n, n,
-                    lambda ix, iy: quadkeylib.tile_to_cell(ix, iy, res))
-        from raster2dggs_spark.dggs import geohashlib
-
-        nbits = 5 * res
-        nx, ny = 1 << ((nbits + 1) // 2), 1 << (nbits // 2)
-        return (lambda lon: (lon + 180.0) / 360.0 * nx,
-                lambda lat: (lat + 90.0) / 180.0 * ny, nx, ny,
-                lambda ix, iy: geohashlib.cell_from_indices(ix, iy, res))
-
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ufun, vfun, nx, ny, make = _axes()
+        ufun, vfun, nx, ny, make = _lattice_axes(dggs, res)
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -459,73 +389,37 @@ def line_cells(lines: DataFrame, res: int, dggs: str = "hex7",
 
     Semantics, per grid family:
 
-    - **Rectangle grids (quadkey / geohash / maidenhead): EXACT
-      supercover.**  Each segment is mapped into the grid's continuous
-      index space (lon linear; quadkey's N-S axis through the Mercator
-      ``fy``, so it is exact at any latitude — no cos(lat) anywhere,
-      the repo's latitude-distortion bug class can't apply), every
+    - **Power-of-two lattice grids (``COVER == "lattice"``: quadkey /
+      geohash): EXACT supercover.**  Each segment is mapped into the
+      grid's continuous index space (lon linear; quadkey's N-S axis
+      through the Mercator ``fy``, so it is exact at any latitude — no
+      cos(lat) anywhere, the repo's latitude-distortion bug class can't
+      apply), every
       grid-line crossing parameter ``t`` is enumerated analytically,
       and the midpoint of each consecutive ``t`` pair names the cell
       of that sub-span.  No sampling, nothing missed; corner-touched
       cells of zero intersection length are (correctly) excluded.
-    - **Curved grids: densified sampling** at ``step_frac`` of the
-      cell pitch per axis in CELL units (E-W arc scaled by cos of the
-      segment's smallest |lat| — the conservative-large factor), the
-      reference's densified-footprint approach (F16) applied to 1-D
-      geometry; cells whose intersection is shorter than the step can
-      be missed (documented contract).
+    - **Other grids (maidenhead included): densified sampling** at
+      ``step_frac`` of the cell pitch per axis in CELL units (E-W arc
+      scaled by cos of the segment's smallest |lat| — the
+      conservative-large factor), the reference's densified-footprint
+      approach (F16) applied to 1-D geometry; cells whose intersection
+      is shorter than the step can be missed (documented contract).
 
     Scale shape: one narrow ``mapInPandas`` — a line row is traversed,
     encoded and deduped entirely in its task (vectorized over all of a
     batch's segments at once); no shuffle, no cross-task state.
     """
-    from raster2dggs_spark.dggs import check_grid
+    from raster2dggs_spark.dggs import grid_lib
 
-    check_grid(dggs)
     schema = T.StructType([
         T.StructField("line_id", T.LongType(), False),
         T.StructField("cell", T.LongType(), False),
     ])
-    # power-of-2 grids only: u = frac * 2^k is EXACT scaling, so
-    # floor(u) is bit-identical to the lib encode's quantizer;
-    # maidenhead's mixed-radix digit-peel rounds per level and
-    # would disagree on boundary-grazing spans -> sampling branch
-    rect = dggs in ("quadkey", "geohash")
-
-    def _axes(cover):
-        """(u(lon), v(lat), nx, ny, from_indices) for rectangle grids."""
-        if dggs == "quadkey":
-            from raster2dggs_spark.dggs import quadkeylib
-
-            n = 1 << res
-
-            def fy(lat):
-                phi = np.radians(np.clip(lat, -quadkeylib.MAX_LAT,
-                                         quadkeylib.MAX_LAT))
-                return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi))
-                        / np.pi) / 2.0
-
-            return (lambda lon: (lon + 180.0) / 360.0 * n,
-                    lambda lat: fy(lat) * n, n, n,
-                    lambda ix, iy: quadkeylib.tile_to_cell(ix, iy, res))
-        if dggs == "geohash":
-            from raster2dggs_spark.dggs import geohashlib
-
-            nbits = 5 * res
-            nx, ny = 1 << ((nbits + 1) // 2), 1 << (nbits // 2)
-            return (lambda lon: (lon + 180.0) / 360.0 * nx,
-                    lambda lat: (lat + 90.0) / 180.0 * ny, nx, ny,
-                    lambda ix, iy: geohashlib.cell_from_indices(
-                        ix, iy, res))
-        from raster2dggs_spark.dggs import maidenheadlib
-
-        n = 1
-        for b in maidenheadlib.BASES[:res]:
-            n *= b
-        return (lambda lon: (lon + 180.0) / 360.0 * n,
-                lambda lat: (lat + 90.0) / 180.0 * n, n, n,
-                lambda ix, iy: maidenheadlib.cell_from_indices(
-                    ix, iy, res))
+    # power-of-2 lattices only: maidenhead's mixed-radix digit-peel
+    # rounds per level and would disagree on boundary-grazing spans ->
+    # sampling branch
+    rect = grid_lib(dggs).COVER == "lattice"
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from raster2dggs_spark.dggs import cover
@@ -566,7 +460,7 @@ def line_cells(lines: DataFrame, res: int, dggs: str = "hex7",
             x0 = np.concatenate(x0); y0 = np.concatenate(y0)
             x1 = np.concatenate(x1); y1 = np.concatenate(y1)
             if rect:
-                ufun, vfun, nx, ny, make = _axes(cover)
+                ufun, vfun, nx, ny, make = _lattice_axes(dggs, res)
                 u0, u1 = ufun(x0), ufun(x1)
                 v0, v1 = vfun(y0), vfun(y1)
                 du, dv = u1 - u0, v1 - v0
@@ -745,93 +639,17 @@ def point_in_polygon_join(points: DataFrame, polys: DataFrame, res: int = 7,
 
 def parent_expr(cell_col, parent_res: int, dggs: str = "hex7",
                 from_res: int | None = None):
-    """Native-Column cell→parent (pure bit arithmetic — zero Python).
+    """Native-Column cell→parent (pure bit arithmetic — zero Python):
+    the grid's ``parent_expr``.  Grids whose packed id carries its own
+    length (geohash, rhp, ...) need ``from_res``, the cells' uniform
+    resolution."""
+    from raster2dggs_spark.dggs import grid_lib
 
-    H3: set res nibble, fill finer digits with 7 (h3lib.cell_to_parent
-    semantics).  S2: (id & -lsb) | lsb.  Geohash: prefix truncation —
-    requires ``from_res`` (the cells' uniform precision) since the packed
-    id carries its own length."""
+    expr = grid_lib(dggs).parent_expr
+    if expr is None:
+        raise ValueError(f"{dggs!r} has no native parent expression")
     c = F.col(cell_col) if isinstance(cell_col, str) else cell_col
-    if dggs == "hex7":
-        res_mask = ~(0xF << 52)  # python int; fits int64
-        fill = (1 << (3 * (15 - parent_res))) - 1
-        return (c.bitwiseAND(F.lit(res_mask))).bitwiseOR(
-            F.lit(parent_res << 52)
-        ).bitwiseOR(F.lit(fill))
-    if dggs == "s2":
-        lsb = 1 << (2 * (30 - parent_res))
-        return (c.bitwiseAND(F.lit(-lsb))).bitwiseOR(F.lit(lsb))
-    if dggs == "geohash":
-        if from_res is None:
-            raise ValueError("geohash parent_expr needs from_res")
-        drop = 5 * (from_res - parent_res)
-        bits = F.shiftrightunsigned(c, 4 + drop)
-        return F.shiftleft(bits, 4).bitwiseOR(F.lit(parent_res))
-    if dggs == "rhp":
-        if from_res is None:
-            raise ValueError("rhp parent_expr needs from_res")
-        prod = 9 ** (from_res - parent_res)
-        # 6*9^15 < 2^53 -> double floor-div exact
-        bits = F.shiftrightunsigned(c, 4)
-        return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
-            F.lit(parent_res)
-        )
-    if dggs == "a5":
-        # zero the digits finer than parent_res (and the quintant when
-        # parent_res is 0), rewrite the 5-bit res field @55 — mirrors
-        # a5lib.cell_to_parent exactly
-        s = 55 if parent_res == 0 else 52 - 2 * (parent_res - 1)
-        mask = (-(1 << s)) & ~(0x1F << 55)
-        return (c.bitwiseAND(F.lit(mask))).bitwiseOR(F.lit(parent_res << 55))
-    if dggs in ("i4r", "e4r"):
-        # per-axis right shift of the 26-bit row/col fields — mirrors
-        # i4rlib.cell_to_parent exactly (e4r shares the id layout;
-        # needs the cells' uniform res)
-        if from_res is None:
-            raise ValueError("i4r parent_expr needs from_res")
-        sh = from_res - parent_res
-        row = F.shiftrightunsigned(c, 26).bitwiseAND(F.lit(0x3FFFFFF))
-        col = c.bitwiseAND(F.lit(0x3FFFFFF))
-        head = c.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
-            F.lit(parent_res << 52))
-        return head.bitwiseOR(
-            F.shiftleft(F.shiftrightunsigned(row, sh), 26)
-        ).bitwiseOR(F.shiftrightunsigned(col, sh))
-    if dggs in ("i9r", "e9r"):
-        # per-axis floor-div of the 26-bit row/col fields by 3^k —
-        # mirrors i9rlib.cell_to_parent; values < 2^26 so the double
-        # floor-div is exact (rhp precedent)
-        if from_res is None:
-            raise ValueError("i9r parent_expr needs from_res")
-        div = 3 ** (from_res - parent_res)
-        row = F.shiftrightunsigned(c, 26).bitwiseAND(F.lit(0x3FFFFFF))
-        col = c.bitwiseAND(F.lit(0x3FFFFFF))
-        head = c.bitwiseAND(F.lit(0xF << 57)).bitwiseOR(
-            F.lit(parent_res << 52))
-        return head.bitwiseOR(
-            F.shiftleft(F.floor(row / F.lit(div)).cast("long"), 26)
-        ).bitwiseOR(F.floor(col / F.lit(div)).cast("long"))
-    if dggs == "quadkey":
-        # drop trailing base-4 digits — mirrors quadkeylib.cell_to_parent
-        if from_res is None:
-            raise ValueError("quadkey parent_expr needs from_res")
-        drop = 2 * (from_res - parent_res)
-        bits = F.shiftrightunsigned(c, 5 + drop)
-        return F.shiftleft(bits, 5).bitwiseOR(F.lit(parent_res))
-    if dggs == "maidenhead":
-        if from_res is None:
-            raise ValueError("maidenhead parent_expr needs from_res")
-        from raster2dggs_spark.dggs.maidenheadlib import BASES
-
-        prod = 1
-        for b in BASES[parent_res:from_res]:
-            prod *= b * b
-        # max packed value (18·10·24·10·24)² < 2^53 → double floor-div exact
-        bits = F.shiftrightunsigned(c, 4)
-        return F.shiftleft(F.floor(bits / F.lit(prod)).cast("long"), 4).bitwiseOR(
-            F.lit(parent_res)
-        )
-    raise ValueError(dggs)
+    return expr(c, parent_res, from_res)
 
 
 def _res_for_radius(radius_m: float, dggs: str, fine_res: int) -> int:
@@ -877,8 +695,8 @@ def disk_cover_cells(df: DataFrame, radius: float, cres: int,
     """Explode each query point into the cells (at ``cres``) of its
     geodesic disk of ``radius`` meters — the shared candidate-cell
     generator for kNN and within-distance joins.  Exact integer
-    enumeration on fixed-degree grids (geohash/maidenhead); dense
-    0.35x-pitch ring sampling elsewhere.  One narrow ``mapInPandas``
+    enumeration on the rectangle grids (geohash/maidenhead/quadkey);
+    dense 0.35x-pitch ring sampling elsewhere.  One narrow ``mapInPandas``
     over (id, lon, lat) rows; no shuffle."""
     schema = T.StructType([
         T.StructField(q_id, df.schema[q_id].dataType, False),
@@ -897,7 +715,7 @@ def disk_cover_cells(df: DataFrame, radius: float, cres: int,
     # enumeration (quadkey rows through the Mercator fy axis — its cells
     # SHRINK in lat-degrees toward the poles, so equatorial-pitch ring
     # sampling would skip rows there: the lat-distortion bug class)
-    fixed_deg_grid = dggs in ("geohash", "maidenhead", "quadkey")
+    fixed_deg_grid = _cover.grid_lib(dggs).COVER != "sample"
 
     def disk_pattern(pitch):
         steps = int(np.ceil(ang / pitch)) + 1
@@ -909,69 +727,32 @@ def disk_cover_cells(df: DataFrame, radius: float, cres: int,
             pat_rad.append(np.full(kk, rad))
         return np.concatenate(pat_az), np.concatenate(pat_rad)
 
-    def _ragged_ranges(lo, hi):
-        """Flatten per-row integer ranges [lo_i, hi_i] into
-        (row_index, value) arrays."""
-        counts = (hi - lo + 1).astype(np.int64)
-        total = int(counts.sum())
-        idx = np.repeat(np.arange(lo.shape[0]), counts)
-        starts = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        seq = np.arange(total) - np.repeat(starts, counts)
-        return idx, np.repeat(lo, counts) + seq
-
     def fn_fixed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # geohash/maidenhead cells are lon/lat rectangles with FIXED
-        # degree spans, so the disk cover is enumerated EXACTLY as
+        # rectangle-grid cells are lon/lat (or lon/Mercator-lat)
+        # rectangles, so the disk cover is enumerated EXACTLY as
         # integer index ranges per lat band (conservative lon width
         # per band) — an angular sampling pattern would need its
         # pitch shrunk by cos(lat) and blow up near the poles
-        from raster2dggs_spark.dggs import cover
+        from raster2dggs_spark.dggs import cover, grid_lib
 
         ang_deg = np.degrees(ang)
-        if dggs == "quadkey":
-            from raster2dggs_spark.dggs import quadkeylib
-
-            nq = 1 << cres
-            nlon = nlat = nq
-            lonspan = 360.0 / nq
-
-            def row_of_lat(lat):
-                phi = np.radians(np.clip(lat, -quadkeylib.MAX_LAT,
-                                         quadkeylib.MAX_LAT))
-                return (1.0 - np.log(np.tan(phi) + 1.0 / np.cos(phi))
-                        / np.pi) / 2.0 * nq
-
-            def lat_of_row(v):
-                # edge rows absorb the |lat| > MAX_LAT clip -> extend
-                # their band to the pole for the width computation
-                out = np.degrees(np.arctan(np.sinh(
-                    np.pi * (1.0 - 2.0 * np.asarray(v, np.float64) / nq))))
-                out = np.where(np.asarray(v) <= 0, 90.0, out)
-                return np.where(np.asarray(v) >= nq, -90.0, out)
-        else:
-            lonspan, latspan = cover.cell_spans(cres, dggs)
-            nlon = int(round(360.0 / lonspan))
-            nlat = int(round(180.0 / latspan))
-
-            def row_of_lat(lat):
-                return (lat + 90.0) / latspan
-
-            def lat_of_row(v):
-                return np.asarray(v, np.float64) * latspan - 90.0
+        lib = grid_lib(dggs)
+        nlon, nlat = lib.lattice_shape(cres)
+        lonspan = 360.0 / nlon
         for pdf in batches:
             if not len(pdf):
                 continue
             qlon = pdf[lon_col].values.astype(np.float64)
             qlat = pdf[lat_col].values.astype(np.float64)
-            r_a = row_of_lat(qlat - ang_deg)
-            r_b = row_of_lat(qlat + ang_deg)
+            r_a = lib.row_of_lat(qlat - ang_deg, cres)
+            r_b = lib.row_of_lat(qlat + ang_deg, cres)
             li0 = np.clip(np.floor(np.minimum(r_a, r_b))
                           .astype(np.int64), 0, nlat - 1)
             li1 = np.clip(np.floor(np.maximum(r_a, r_b))
                           .astype(np.int64), 0, nlat - 1)
-            qi_r, row = _ragged_ranges(li0, li1)
-            b0 = lat_of_row(row)
-            b1 = lat_of_row(row + 1)
+            qi_r, row = _ragged(li0, li1)
+            b0 = lib.lat_of_row(row, cres)
+            b1 = lib.lat_of_row(row + 1, cres)
             band_lat_lo = np.minimum(b0, b1)
             band_lat_hi = np.maximum(b0, b1)
             # EXACT per-band lon half-width (spherical law of
@@ -1022,12 +803,12 @@ def disk_cover_cells(df: DataFrame, radius: float, cres: int,
             ji0 = np.floor((qlon[qi_r] - dlon + 180.0) / lonspan).astype(np.int64)
             ji1 = np.floor((qlon[qi_r] + dlon + 180.0) / lonspan).astype(np.int64)
             ji1 = np.minimum(ji1, ji0 + nlon - 1)  # full wrap at most once
-            qi_c, col = _ragged_ranges(ji0, ji1)
+            qi_c, col = _ragged(ji0, ji1)
             col = np.mod(col, nlon)
             rowc = row[qi_c]
             qidx = qi_r[qi_c]
             lon_c = (col + 0.5) * lonspan - 180.0
-            lat_c = lat_of_row(rowc + 0.5)
+            lat_c = lib.lat_of_row(rowc + 0.5, cres)
             cells = cover.encode(lon_c, lat_c, cres, dggs)
             yield pd.DataFrame({
                 q_id: pdf[q_id].values[qidx],

@@ -17,7 +17,7 @@ Method — first-order conservative "centroid regrid":
   temperature, NDVI) or the plain sum (extensive: counts, mass) of the
   source cells that land in it;
 - optional ``oversample=k`` refines each source cell into its own
-  children at ``src_res + k`` first (grids with a children surface),
+  children at ``src_res + k`` first (hex7 sources),
   splitting the parent's area equally across children — boundary-
   accurate for source cells comparable in size to destination cells.
 
@@ -75,21 +75,22 @@ def regrid_cells(
     NULL/NaN source values contribute neither weight nor value to that
     column (per-column weights, like every NaN-aware mean here).
     """
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.dggs.cover import cell_center, encode, grid_lib
+    from raster2dggs_spark.dggs import check_grid, h3lib
+    from raster2dggs_spark.dggs.cover import (
+        cell_center, cell_children, encode, grid_lib,
+    )
 
-    check_grid(src_dggs)
+    src_lib = grid_lib(src_dggs)
     check_grid(dst_dggs)
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
     if oversample < 0:
         raise ValueError("oversample must be >= 0")
-    src_lib = grid_lib(src_dggs)
-    if oversample and src_dggs != "hex7":
-        # hex7 exposes the uniform multi-level partition children API
-        # this needs; i3h children are SHARED between parents (not a
-        # partition — wrong weights), and the others expand one level
-        # with per-grid shapes.  Centroid mode is grid-generic.
+    if oversample and src_lib is not h3lib:
+        # only hex7 is validated here: i3h children are SHARED between
+        # parents (not a partition — wrong weights), and rhp's area is
+        # per resolution (AREA_BY_RES), not per cell.  Centroid mode is
+        # grid-generic.
         raise ValueError(
             "oversample is supported for src_dggs='hex7' only; use "
             "oversample=0 (centroid regrid) for other grids")
@@ -114,8 +115,8 @@ def regrid_cells(
                 if res.min() != res.max():
                     raise ValueError(
                         "oversample requires a single source resolution")
-                child_res = int(res[0]) + oversample
-                kid_ids = src_lib.cell_to_children(src, child_res).ravel()
+                kid_ids = cell_children(src, int(res[0]) + oversample,
+                                        src_dggs)
                 n_kids = kid_ids.shape[0] // src.shape[0]  # uniform 7^k
                 rep = np.repeat(np.arange(src.shape[0]), n_kids)
                 w = w[rep] / float(n_kids)

@@ -206,8 +206,8 @@ def test_hex7_dense_cover_density_battery():
                 continue
             cand = np.unique(h3lib.latlng_to_cell(
                 np.repeat(lons, lats.size), np.tile(lats, lons.size), res))
-            ref = h3lib._filter_centers(cand, lon_min, lat_min,
-                                        lon_max, lat_max)
+            ref = cover._keep_centers(cand, lon_min, lat_min,
+                                      lon_max, lat_max, "hex7")
 
             # compare PHYSICAL hexes, not raw ids: near icosahedron
             # face seams the encoder is not canonical (one hex, two
@@ -238,7 +238,7 @@ def test_hex7_cell_to_children():
     lat = np.degrees(np.arcsin(rng.uniform(-1, 1, 50)))
     cells = np.unique(h3lib.latlng_to_cell(lon, lat, 5))
     for dr in (1, 2):
-        ch = h3lib.cell_to_children(cells, 5 + dr)
+        ch = cover.cell_children(cells, 5 + dr, "hex7")
         assert ch.size == cells.size * 7 ** dr
         assert np.unique(ch).size == ch.size
         assert (h3lib.get_resolution(ch.astype(np.uint64)) == 5 + dr).all()

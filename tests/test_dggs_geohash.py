@@ -33,6 +33,34 @@ def test_roundtrip_and_prefix_parent():
         assert all(f.startswith(q) for f, q in zip(s_full, s_par))
 
 
+def test_cell_to_indices_matches_bitwise_deinterleave():
+    """The lattice indices (magic-mask compress) equal a per-bit
+    de-interleave of the hash — lon bits at even positions from the
+    MSB — and round-trip through cell_from_indices, for odd and even
+    bit counts."""
+    rng = np.random.default_rng(4)
+    lon = rng.uniform(-180.0, 180.0, 500)
+    lat = rng.uniform(-90.0, 90.0, 500)
+    for prec in (1, 2, 5, 8, 12):
+        c = gh.lonlat_to_cell(lon, lat, prec)
+        nbits = 5 * prec
+        bits = [int(v) >> 4 & ((1 << nbits) - 1) for v in c]
+        ref_x, ref_y = [], []
+        for b in bits:
+            x = y = 0
+            for k in range(nbits):
+                bit = (b >> (nbits - 1 - k)) & 1
+                if k % 2 == 0:
+                    x = (x << 1) | bit
+                else:
+                    y = (y << 1) | bit
+            ref_x.append(x)
+            ref_y.append(y)
+        ix, iy = gh.cell_to_indices(c)
+        assert ix.tolist() == ref_x and iy.tolist() == ref_y
+        assert np.array_equal(gh.cell_from_indices(ix, iy, prec), c)
+
+
 def test_geohash_pipeline(spark):
     from raster2dggs_spark.sources import images_spark_df
     from raster2dggs_spark.operators.indexing import index_point_agg

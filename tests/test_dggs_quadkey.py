@@ -6,6 +6,7 @@ pole clamping, and Spark parent_expr parity."""
 import numpy as np
 import pytest
 
+from raster2dggs_spark.dggs import cover
 from raster2dggs_spark.dggs import quadkeylib as qk
 
 
@@ -53,7 +54,7 @@ def test_string_roundtrip_and_parent_prefix():
 
 def test_children_partition_and_containment():
     c = qk.lonlat_to_cell(np.array([13.4]), np.array([52.5]), 6)
-    kids = qk.cell_to_children(c, 9)
+    kids = cover.cell_children(c, 9, "quadkey")
     assert kids.shape[0] == 4 ** 3
     assert np.unique(kids).size == kids.size
     assert (qk.cell_to_parent(kids, 6) == c[0]).all()
@@ -73,7 +74,7 @@ def test_area_closure_and_children_sum():
     band = 4 * np.pi * qk.EARTH_R ** 2 * np.sin(np.radians(qk.MAX_LAT))
     assert qk.cell_area_m2(all3).sum() == pytest.approx(band, rel=1e-12)
     c = qk.lonlat_to_cell(np.array([-60.0]), np.array([-33.0]), 5)
-    kids = qk.cell_to_children(c, 8)
+    kids = cover.cell_children(c, 8, "quadkey")
     assert qk.cell_area_m2(kids).sum() == pytest.approx(
         float(qk.cell_area_m2(c)[0]), rel=1e-12)
 

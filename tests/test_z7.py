@@ -37,7 +37,7 @@ def test_order_isomorphism_within_res():
     """z7 is the base-7 positional reading — sibling order under a
     common parent is preserved (children of one parent are contiguous)."""
     c = np.unique(_cells(5000, 4))
-    kids = np.sort(h3lib.cell_to_children(c[:50], 5).ravel())
+    kids = np.sort(h3lib.cell_to_children(c[:50]).ravel())
     z = hex7_to_z7_np(kids, 5)
     blocks = np.sort(z).reshape(-1, 7)
     assert (np.diff(blocks, axis=1) == (1 << 4)).all()
