@@ -153,9 +153,8 @@ def pitch_deg(precision: int) -> float:
 
 
 def n_cells(precision: int) -> int:
-    # known defect: S2's count, not geohash's 32^p — the resolution
-    # auto-modes size geohash levels by it
-    return 6 * 4**precision
+    nx, ny = lattice_shape(precision)
+    return nx * ny
 
 
 def cell_to_indices(cells):

@@ -796,23 +796,6 @@ def strings_to_cells(strs):
     return out.astype(np.int64)
 
 
-# --- coverings (polyfill / disks) — lattice-sampling based --------------
-
-
-def _sample_cover(lon_pts, lat_pts, res: int):
-    cells = latlng_to_cell(lon_pts, lat_pts, res)
-    return np.unique(cells)
-
-
-def cover_bbox(lon_min, lat_min, lon_max, lat_max, res: int, max_samples: int = 4_000_000):
-    """All cells whose *center* lies in the bbox — the grid-generic
-    guaranteed-density sampler (``cover.cover_bbox``) on this grid."""
-    from raster2dggs_spark.dggs import cover
-
-    return cover.cover_bbox(lon_min, lat_min, lon_max, lat_max, res,
-                            "hex7", max_samples=max_samples)
-
-
 def cell_area_m2(cells, radius_m: float = 6371007.1809):
     """Per-cell spherical area (F7) from the boundary polygon via the
     spherical trapezoid (Green's theorem) formula:
@@ -826,24 +809,3 @@ def cell_area_m2(cells, radius_m: float = 6371007.1809):
     phi2 = np.roll(phi, -1, axis=1)
     s = np.sum((lam2 - lam) * (np.sin(phi) + np.sin(phi2)), axis=1)
     return 0.5 * radius_m * radius_m * np.abs(s)
-
-
-def cover_disk(lon, lat, radius_m, res: int, earth_radius_m: float = 6371007.1809):
-    """Cells within ``radius_m`` of a point (center-distance semantics) —
-    the radius-expansion analogue of ``grid_disk`` ring expansion used for
-    kNN candidate generation (SURVEY.md §2.3 J6)."""
-    ang = radius_m / earth_radius_m
-    pitch = cell_pitch_rad(res) * 0.35
-    steps = int(np.ceil(ang / pitch)) + 1
-    rr = np.linspace(0.0, ang, steps + 1)
-    pts_lat = [np.array([np.radians(lat)])]
-    pts_lon = [np.array([np.radians(lon)])]
-    for rad in rr[1:]:
-        k = max(6, int(np.ceil(2 * np.pi * rad / pitch)))
-        az = np.linspace(0.0, 2 * np.pi, k, endpoint=False)
-        la, lo = _geo_az_distance(np.radians(lat), np.radians(lon), az, rad)
-        pts_lat.append(la)
-        pts_lon.append(lo)
-    glat = np.degrees(np.concatenate(pts_lat))
-    glon = np.degrees(np.concatenate(pts_lon))
-    return _sample_cover(glon, glat, res)

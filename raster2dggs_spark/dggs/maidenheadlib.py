@@ -164,9 +164,8 @@ def pitch_deg(precision: int) -> float:
 
 
 def n_cells(precision: int) -> int:
-    # known defect: S2's count, not maidenhead's prod(b²) — the
-    # resolution auto-modes size maidenhead levels by it
-    return 6 * 4**precision
+    nx, ny = lattice_shape(precision)
+    return nx * ny
 
 
 def cell_to_lonlat(cells):

@@ -165,6 +165,124 @@ def default_parent_res(res: int, dggs: str = "hex7") -> int:
     return max(lib.MIN_RES, res - lib.PARENT_OFFSET)
 
 
+def _band_kernel(n_bands: int, nodata_policy: str, emit_fill=None):
+    """Kernel of the raw-value operators: per-pixel ``band_1..band_n``
+    float64 columns (short images pad with NaN, extra bands drop).
+    ``omit`` keeps the pixels with data in any band
+    (rasterindexer.py:160-170); ``emit`` keeps every pixel and, when
+    ``emit_fill(row)`` gives a value, fills nodata with it
+    (rasterindexer.py:146-157)."""
+    bcols = band_cols(n_bands)
+
+    def kernel(arr, affine, row):
+        k, h, w = arr.shape
+        vals = arr.reshape(k, h * w).astype(np.float64)
+        if nodata_policy == "omit":
+            keep = ~np.all(np.isnan(vals), axis=0)
+        elif nodata_policy == "emit":
+            keep = np.ones(vals.shape[1], dtype=bool)
+            fill = None if emit_fill is None else emit_fill(row)
+            if fill is not None and not np.isnan(fill):
+                vals = np.where(np.isnan(vals), fill, vals)
+        else:
+            raise ValueError(nodata_policy)
+        pad = np.full(vals.shape[1], np.nan)
+        return keep, {c: vals[i] if i < k else pad
+                      for i, c in enumerate(bcols)}
+
+    return kernel
+
+
+def _walk(batches: Iterator[pd.DataFrame], bands, kernel,
+          interior: bool = False):
+    """The one pixel walk: per tile, decode the selected bands, call
+    ``kernel(arr, affine, row) -> (keep, cols)`` and yield ``(row, lon,
+    lat, cols)`` for the kept pixels' centres.
+
+    ``keep`` is a boolean mask over the tile's pixels -- over its
+    interior (the tile minus a 1-px border) when ``interior``, and
+    tiles smaller than 3x3 then never reach the kernel.  Each ``cols``
+    value holds one value per pixel of that same grid (any shape that
+    ravels to it) and comes back masked to the kept pixels."""
+    from raster2dggs_spark.geo import pixel_centers_lonlat
+
+    for pdf in batches:
+        for row, arr in _decode_rows(pdf, bands):
+            h, w = arr.shape[-2:]
+            if interior and (h < 3 or w < 3):
+                continue
+            affine = (row.affine_a, row.affine_b, row.affine_c,
+                      row.affine_d, row.affine_e, row.affine_f)
+            keep, cols = kernel(arr, affine, row)
+            keep = np.ravel(keep)
+            if not keep.any():
+                continue
+            at = keep
+            if interior:
+                at = np.zeros((h, w), dtype=bool)
+                at[1:-1, 1:-1] = keep.reshape(h - 2, w - 2)
+                at = at.ravel()
+            lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
+            yield row, lon[at], lat[at], {
+                c: np.ravel(v)[keep] for c, v in cols.items()}
+
+
+def encode_pixels(affine, w: int, h: int, crs: str, idx, res: int,
+                  dggs: str):
+    """Cells of the w x h tile's pixels at row-major ``idx`` -- the
+    walk's own centres and encoder, for a kernel whose output names
+    another pixel's cell.  Encoding is pointwise, so these are the ids
+    the walk gives the same pixels."""
+    from raster2dggs_spark.geo import pixel_centers_lonlat
+
+    lon, lat = pixel_centers_lonlat(affine, w, h, crs)
+    return _encode_points(lon[idx], lat[idx], res, None, dggs)[0]
+
+
+def pixel_walk(images: DataFrame, res: int, parent_res: int | None,
+               dggs: str, fields: list, kernel, bands=None,
+               interior: bool = False,
+               keep_image_id: bool = True) -> DataFrame:
+    """A per-pixel operator as one narrow ``mapInPandas`` (no shuffle):
+    the :func:`_walk` over ``kernel``, each kept pixel encoded to its
+    ``cell`` and ``parent``.  Output: ``(image_id?, parent, cell,
+    *fields)``, the field columns taken from the kernel's ``cols``."""
+    from raster2dggs_spark.dggs import check_grid
+
+    check_grid(dggs)
+    if parent_res is None:
+        parent_res = default_parent_res(res, dggs)
+    schema = T.StructType(
+        ([T.StructField("image_id", T.StringType(), False)]
+         if keep_image_id else [])
+        + [T.StructField("parent", T.LongType(), False),
+           T.StructField("cell", T.LongType(), False)]
+        + list(fields))
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        buf: list[pd.DataFrame] = []
+        buf_rows = 0
+        for row, lon, lat, cols in _walk(batches, bands, kernel, interior):
+            cell, parent = _encode_points(lon, lat, res, parent_res, dggs)
+            data = {}
+            if keep_image_id:
+                data["image_id"] = np.repeat(row.image_id, cell.shape[0])
+            data["parent"] = parent
+            data["cell"] = cell
+            for f in fields:
+                data[f.name] = cols[f.name]
+            buf.append(pd.DataFrame(data))
+            buf_rows += cell.shape[0]
+            if buf_rows >= 250_000:
+                yield pd.concat(buf, ignore_index=True)
+                buf, buf_rows = [], 0
+        if buf:
+            yield pd.concat(buf, ignore_index=True)
+
+    return _prune(images, keep_image_id,
+                  keep_band_names=_wants_labels(bands)).mapInPandas(fn, schema)
+
+
 def pixel_cells(
     images: DataFrame,
     res: int,
@@ -182,65 +300,15 @@ def pixel_cells(
     schema: images with fewer bands emit nulls in the tail columns — the
     Spark-safe version of the reference's all-nodata band drop
     (SURVEY.md §2.2 P5)."""
-    from raster2dggs_spark.dggs import check_grid
 
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    bcols = band_cols(n_bands)
-    fields = ([T.StructField("image_id", T.StringType(), False)] if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
-    ] + [T.StructField(c, T.DoubleType(), True) for c in bcols]
-    schema = T.StructType(fields)
+    def emit_fill(row):
+        return nodata_fill if nodata_fill is not None else row.nodata
 
-    emit_fill = nodata_fill
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
-
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, bands):
-                k, h, w = arr.shape
-                vals = arr.reshape(k, h * w).astype(np.float64)
-                if nodata_policy == "omit":
-                    keep = ~np.all(np.isnan(vals), axis=0)
-                    if not keep.any():
-                        continue
-                elif nodata_policy == "emit":
-                    keep = slice(None)
-                    if emit_fill is not None:
-                        vals = np.where(np.isnan(vals), emit_fill, vals)
-                    elif row.nodata is not None and not np.isnan(row.nodata):
-                        vals = np.where(np.isnan(vals), row.nodata, vals)
-                else:
-                    raise ValueError(nodata_policy)
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                lon, lat = lon[keep], lat[keep]
-                vals = vals[:, keep]
-                cell, parent = _encode_points(lon, lat, res, parent_res, dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id, cell.shape[0])
-                data["parent"] = parent
-                data["cell"] = cell
-                for i, c in enumerate(bcols):
-                    data[c] = vals[i] if i < k else np.full(cell.shape[0], np.nan)
-                buf.append(pd.DataFrame(data))
-                buf_rows += cell.shape[0]
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id,
-                  keep_band_names=_wants_labels(bands)).mapInPandas(fn, schema)
+    fields = [T.StructField(c, T.DoubleType(), True)
+              for c in band_cols(n_bands)]
+    return pixel_walk(images, res, parent_res, dggs, fields,
+                      _band_kernel(n_bands, nodata_policy, emit_fill),
+                      bands=bands, keep_image_id=keep_image_id)
 
 
 # ---- flagship: decode→index→aggregate with map-side combine ------------
@@ -290,8 +358,6 @@ def cell_partials(
     deliberately cache-sized: measured on local[32], 120k-pixel flushes
     run ~5x faster end-to-end than 2M-pixel flushes (allocation churn and
     L2 eviction dominate long before Arrow batching overhead matters)."""
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
     bcols = band_cols(n_bands)
     schema = _partial_schema(n_bands, stats)
 
@@ -332,37 +398,21 @@ def cell_partials(
                 data[f"{c}_max"] = mx
         return pd.DataFrame(data)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
+    kernel = _band_kernel(n_bands, nodata_policy)
 
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         lon_l: list[np.ndarray] = []
         lat_l: list[np.ndarray] = []
         val_l: list[np.ndarray] = []
         acc = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, bands):
-                k, h, w = arr.shape
-                vals = arr.reshape(k, h * w).astype(np.float64)
-                if nodata_policy == "omit":
-                    keep = ~np.all(np.isnan(vals), axis=0)
-                    if not keep.any():
-                        continue
-                    vals = vals[:, keep]
-                else:
-                    keep = slice(None)
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                lon_l.append(lon[keep])
-                lat_l.append(lat[keep])
-                if k < n_bands:  # pad to fixed schema
-                    pad = np.full((n_bands - k, vals.shape[1]), np.nan)
-                    vals = np.vstack([vals, pad])
-                val_l.append(vals[:n_bands])
-                acc += val_l[-1].shape[1]
-                if acc >= pixel_budget:
-                    yield flush(lon_l, lat_l, val_l)
-                    lon_l, lat_l, val_l, acc = [], [], [], 0
+        for _, lon, lat, cols in _walk(batches, bands, kernel):
+            lon_l.append(lon)
+            lat_l.append(lat)
+            val_l.append(np.stack([cols[c] for c in bcols]))
+            acc += lon.shape[0]
+            if acc >= pixel_budget:
+                yield flush(lon_l, lat_l, val_l)
+                lon_l, lat_l, val_l, acc = [], [], [], 0
         if acc:
             yield flush(lon_l, lat_l, val_l)
 

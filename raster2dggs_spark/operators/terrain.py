@@ -3,8 +3,10 @@
 Classic raster map algebra the reference does not carry (raster2dggs
 indexes source pixel VALUES only): derive Horn-1981 3x3 surface
 gradients per tile inside the decode UDF, then index the derived
-surface to DGGS cells with the engine's normal machinery.  One narrow
-``mapInPandas`` — the stencil needs no cross-tile halo exchange because
+surface to DGGS cells with the engine's normal machinery.  Every
+operator here is a kernel over the one pixel walk
+(``indexing.pixel_walk``, one narrow Spark map) — the stencil needs no
+cross-tile halo exchange because
 every tile's full array is already in task memory (the same obviation
 the reference's margined reads collapse to, SURVEY.md S3); only the
 tile's 1-pixel border is stencil-incomplete and is dropped (documented;
@@ -31,14 +33,13 @@ Definitions (pinned here, mirrored by the SQL oracles):
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from raster2dggs_spark.operators.indexing import encode_pixels, pixel_walk
 
 EARTH_R = 6_371_007.1809
 M_PER_DEG = float(np.radians(1.0) * EARTH_R)
@@ -110,66 +111,17 @@ def terrain_cells(
     narrow, no shuffle; aggregate downstream with the normal
     ``groupBy(cell)`` machinery (e.g. ``.groupBy("cell").agg(avg(...))``
     for the mean-slope-per-cell map)."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
+    def kernel(arr, affine, row):
+        slope, aspect, hill = horn_derivatives(
+            arr[0], affine, row.crs, azimuth_deg, altitude_deg)
+        return ~np.isnan(slope), {"slope_deg": slope, "aspect_deg": aspect,
+                                  "hillshade": hill}
 
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
+    return pixel_walk(images, res, parent_res, dggs, [
         T.StructField("slope_deg", T.DoubleType(), True),
         T.StructField("aspect_deg", T.DoubleType(), True),
         T.StructField("hillshade", T.DoubleType(), True),
-    ]
-    schema = T.StructType(fields)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
-
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                if h < 3 or w < 3:
-                    continue
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                slope, aspect, hill = horn_derivatives(
-                    z, affine, row.crs, azimuth_deg, altitude_deg)
-                keep = ~np.isnan(slope).ravel()
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                interior = np.zeros((h, w), dtype=bool)
-                interior[1:-1, 1:-1] = True
-                lon = lon[interior.ravel()][keep]
-                lat = lat[interior.ravel()][keep]
-                cell, parent = _encode_points(lon, lat, res, parent_res, dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id, cell.shape[0])
-                data["parent"] = parent
-                data["cell"] = cell
-                data["slope_deg"] = slope.ravel()[keep]
-                data["aspect_deg"] = aspect.ravel()[keep]
-                data["hillshade"] = hill.ravel()[keep]
-                buf.append(pd.DataFrame(data))
-                buf_rows += cell.shape[0]
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    ], kernel, bands=[band], interior=True, keep_image_id=keep_image_id)
 
 
 # ESRI D8 codes in SCAN ORDER (E, SE, S, SW, W, NW, N, NE) — the
@@ -238,63 +190,14 @@ def d8_cells(
     parent, cell, d8, drop)`` — same narrow no-shuffle shape as
     :func:`terrain_cells`; NaN-window pixels are dropped.  Aggregate
     downstream (e.g. per-cell majority direction via ``F.mode``)."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
+    def kernel(arr, affine, row):
+        code, drop = d8_flow(arr[0], affine, row.crs)
+        return code != -32768, {"d8": code.astype(np.int32), "drop": drop}
 
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
+    return pixel_walk(images, res, parent_res, dggs, [
         T.StructField("d8", T.IntegerType(), False),
         T.StructField("drop", T.DoubleType(), False),
-    ]
-    schema = T.StructType(fields)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
-
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                if h < 3 or w < 3:
-                    continue
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                code, drop = d8_flow(z, affine, row.crs)
-                keep = (code.ravel() != -32768)
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                interior = np.zeros((h, w), dtype=bool)
-                interior[1:-1, 1:-1] = True
-                lon = lon[interior.ravel()][keep]
-                lat = lat[interior.ravel()][keep]
-                cell, parent = _encode_points(lon, lat, res, parent_res, dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id, cell.shape[0])
-                data["parent"] = parent
-                data["cell"] = cell
-                data["d8"] = code.ravel()[keep].astype(np.int32)
-                data["drop"] = drop.ravel()[keep]
-                buf.append(pd.DataFrame(data))
-                buf_rows += cell.shape[0]
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    ], kernel, bands=[band], interior=True, keep_image_id=keep_image_id)
 
 
 def flow_accumulation(z: np.ndarray, affine, crs: str):
@@ -357,63 +260,14 @@ def accumulation_cells(
     does no more work than the decode itself; cross-tile accumulation
     would need a drainage-graph join and is out of scope (documented,
     like the 1-px stencil border)."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
+    def kernel(arr, affine, row):
+        code, acc = flow_accumulation(arr[0], affine, row.crs)
+        return code != -32768, {"d8": code.astype(np.int32), "acc": acc}
 
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
+    return pixel_walk(images, res, parent_res, dggs, [
         T.StructField("d8", T.IntegerType(), False),
         T.StructField("acc", T.LongType(), False),
-    ]
-    schema = T.StructType(fields)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
-
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                if h < 3 or w < 3:
-                    continue
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                code, acc = flow_accumulation(z, affine, row.crs)
-                keep = (code.ravel() != -32768)
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                interior = np.zeros((h, w), dtype=bool)
-                interior[1:-1, 1:-1] = True
-                lon = lon[interior.ravel()][keep]
-                lat = lat[interior.ravel()][keep]
-                cell, parent = _encode_points(lon, lat, res, parent_res, dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id, cell.shape[0])
-                data["parent"] = parent
-                data["cell"] = cell
-                data["d8"] = code.ravel()[keep].astype(np.int32)
-                data["acc"] = acc.ravel()[keep]
-                buf.append(pd.DataFrame(data))
-                buf_rows += cell.shape[0]
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    ], kernel, bands=[band], interior=True, keep_image_id=keep_image_id)
 
 
 def basin_label(z: np.ndarray, affine, crs: str):
@@ -476,72 +330,26 @@ def basin_cells(
     the terminal is a pit/flat (code 0) rather than an edge outlet.
     Downstream: ``groupBy(image_id, basin)`` for basin sizes,
     ``groupBy(basin_cell)`` for cross-layer joins."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
+    def kernel(arr, affine, row):
+        h, w = arr.shape[1:]
+        code, basin = basin_label(arr[0], affine, row.crs)
+        # terminals can be dropped (NaN-window) pixels, so their cells
+        # are encoded here, from interior to tile pixel indices
+        term = basin.ravel()
+        uniq, inv = np.unique(term, return_inverse=True)
+        r, c = np.divmod(uniq, w - 2)
+        ucell = encode_pixels(affine, w, h, row.crs, (r + 1) * w + c + 1,
+                              res, dggs)
+        return code != -32768, {
+            "d8": code.astype(np.int32), "basin": basin,
+            "basin_cell": ucell[inv], "is_pit": code.ravel()[term] == 0}
 
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
+    return pixel_walk(images, res, parent_res, dggs, [
         T.StructField("d8", T.IntegerType(), False),
         T.StructField("basin", T.LongType(), False),
         T.StructField("basin_cell", T.LongType(), False),
         T.StructField("is_pit", T.BooleanType(), False),
-    ]
-    schema = T.StructType(fields)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
-
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                if h < 3 or w < 3:
-                    continue
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                code, basin = basin_label(z, affine, row.crs)
-                keep = (code.ravel() != -32768)
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                interior = np.zeros((h, w), dtype=bool)
-                interior[1:-1, 1:-1] = True
-                lon_i = lon[interior.ravel()]
-                lat_i = lat[interior.ravel()]
-                # terminals can be dropped (NaN-window) pixels, so the
-                # basin_cell lookup must cover ALL interior pixels
-                cell_all, parent_all = _encode_points(
-                    lon_i, lat_i, res, parent_res, dggs)
-                bflat = basin.ravel()
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id,
-                                                 int(keep.sum()))
-                data["parent"] = parent_all[keep]
-                data["cell"] = cell_all[keep]
-                data["d8"] = code.ravel()[keep].astype(np.int32)
-                data["basin"] = bflat[keep]
-                data["basin_cell"] = cell_all[bflat[keep]]
-                data["is_pit"] = (code.ravel()[bflat[keep]] == 0)
-                buf.append(pd.DataFrame(data))
-                buf_rows += int(keep.sum())
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    ], kernel, bands=[band], interior=True, keep_image_id=keep_image_id)
 
 
 _HORIZON_DIRS = {
@@ -631,62 +439,19 @@ def horizon_cells(
     no-shuffle decode-path shape as the other terrain operators; all
     pixels emit (full tile — a ray op needs no 3x3 stencil), NaN-z
     pixels are dropped."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
-
-    check_grid(dggs)
     directions = tuple(directions)
     for name in directions:
         if name not in _HORIZON_DIRS:
             raise ValueError(f"horizon: unknown direction {name!r}")
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
-    ] + [T.StructField(f"tan_{d}", T.DoubleType(), True)
-         for d in directions]
-    schema = T.StructType(fields)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
+    def kernel(arr, affine, row):
+        z = arr[0]
+        tans = horizon_scan(z, affine, row.crs, directions)
+        return ~np.isnan(z), {f"tan_{d}": tans[d] for d in directions}
 
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                tans = horizon_scan(z, affine, row.crs, directions)
-                keep = ~np.isnan(z.ravel())
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                cell, parent = _encode_points(
-                    lon[keep], lat[keep], res, parent_res, dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id,
-                                                 int(keep.sum()))
-                data["parent"] = parent
-                data["cell"] = cell
-                for d in directions:
-                    data[f"tan_{d}"] = tans[d].ravel()[keep]
-                buf.append(pd.DataFrame(data))
-                buf_rows += int(keep.sum())
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    return pixel_walk(images, res, parent_res, dggs, [
+        T.StructField(f"tan_{d}", T.DoubleType(), True) for d in directions
+    ], kernel, bands=[band], keep_image_id=keep_image_id)
 
 
 def terrain_point_agg(images: DataFrame, res: int, dggs: str = "hex7",
@@ -828,69 +593,26 @@ def viewshed_cells(
     as the other terrain operators; NaN-z pixels are dropped;
     ``keep_pixel`` adds the tile-local (row, col) for relational
     replay.  Geographic CRS tiles raise (latitude-distortion rule)."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
-
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
-    ]
+    fields = []
     if keep_pixel:
         fields += [T.StructField("pr", T.LongType(), False),
                    T.StructField("pc", T.LongType(), False)]
     fields += [T.StructField("visible", T.BooleanType(), False)]
-    schema = T.StructType(fields)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
+    def kernel(arr, affine, row):
+        if row.crs == "EPSG:4326":
+            raise ValueError(
+                "viewshed: geographic CRS tiles have "
+                "latitude-varying step lengths along a ray; "
+                "reproject first (latitude-distortion rule)")
+        z = arr[0]
+        cols = {"visible": viewshed(z, observer, obs_height)}
+        if keep_pixel:
+            cols["pr"], cols["pc"] = np.mgrid[0:z.shape[0], 0:z.shape[1]]
+        return ~np.isnan(z), cols
 
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                if row.crs == "EPSG:4326":
-                    raise ValueError(
-                        "viewshed: geographic CRS tiles have "
-                        "latitude-varying step lengths along a ray; "
-                        "reproject first (latitude-distortion rule)")
-                h, w = z.shape
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                vis = viewshed(z, observer, obs_height)
-                keep = ~np.isnan(z.ravel())
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                cell, parent = _encode_points(
-                    lon[keep], lat[keep], res, parent_res, dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id,
-                                                 int(keep.sum()))
-                data["parent"] = parent
-                data["cell"] = cell
-                if keep_pixel:
-                    rr, cc = np.mgrid[0:h, 0:w]
-                    data["pr"] = rr.ravel()[keep]
-                    data["pc"] = cc.ravel()[keep]
-                data["visible"] = vis.ravel()[keep]
-                buf.append(pd.DataFrame(data))
-                buf_rows += int(keep.sum())
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    return pixel_walk(images, res, parent_res, dggs, fields, kernel,
+                      bands=[band], keep_image_id=keep_image_id)
 
 
 def terrain_indices(z: np.ndarray):
@@ -934,67 +656,15 @@ def terrain_index_cells(
     — the gdaldem TPI/TRI/roughness modes the slope/aspect/hillshade
     operator does not cover.  Same narrow no-shuffle decode-path shape
     as :func:`terrain_cells`."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
+    def kernel(arr, affine, row):
+        tpi, tri, rough = terrain_indices(arr[0])
+        return ~np.isnan(tpi), {"tpi": tpi, "tri": tri, "roughness": rough}
 
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
+    return pixel_walk(images, res, parent_res, dggs, [
         T.StructField("tpi", T.DoubleType(), True),
         T.StructField("tri", T.DoubleType(), True),
         T.StructField("roughness", T.DoubleType(), True),
-    ]
-    schema = T.StructType(fields)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
-
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                if h < 3 or w < 3:
-                    continue
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                tpi, tri, rough = terrain_indices(z)
-                keep = ~np.isnan(tpi).ravel()
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                interior = np.zeros((h, w), dtype=bool)
-                interior[1:-1, 1:-1] = True
-                lon = lon[interior.ravel()][keep]
-                lat = lat[interior.ravel()][keep]
-                cell, parent = _encode_points(lon, lat, res, parent_res,
-                                              dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id,
-                                                 cell.shape[0])
-                data["parent"] = parent
-                data["cell"] = cell
-                data["tpi"] = tpi.ravel()[keep]
-                data["tri"] = tri.ravel()[keep]
-                data["roughness"] = rough.ravel()[keep]
-                buf.append(pd.DataFrame(data))
-                buf_rows += cell.shape[0]
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    ], kernel, bands=[band], interior=True, keep_image_id=keep_image_id)
 
 
 def flow_length(z: np.ndarray, affine, crs: str):
@@ -1073,20 +743,7 @@ def flow_length_cells(
     exact dot product with the tile's pitches, computed ONCE from the
     integer counters.  Same narrow no-shuffle decode-path shape as
     :func:`basin_cells`; NaN-window pixels are dropped."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
-
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
-    ]
+    fields = []
     if keep_pixel:
         fields += [T.StructField("pr", T.LongType(), False),
                    T.StructField("pc", T.LongType(), False)]
@@ -1096,59 +753,21 @@ def flow_length_cells(
         T.StructField("n_diag", T.LongType(), False),
         T.StructField("flow_len_m", T.DoubleType(), False),
     ]
-    schema = T.StructType(fields)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
+    def kernel(arr, affine, row):
+        h, w = arr.shape[1:]
+        code, ew, ns, dg = flow_length(arr[0], affine, row.crs)
+        a, e = float(affine[0]), float(affine[4])
+        dd = float(np.sqrt(a * a + e * e))
+        cols = {"n_ew": ew, "n_ns": ns, "n_diag": dg,
+                "flow_len_m": ew * abs(a) + ns * abs(e) + dg * dd}
+        if keep_pixel:
+            cols["pr"], cols["pc"] = np.mgrid[1:h - 1, 1:w - 1]
+        return code >= 0, cols   # NaN-window pixels: -32768
 
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                if h < 3 or w < 3:
-                    continue
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                code, ew, ns, dg = flow_length(z, affine, row.crs)
-                keep = (code >= 0).ravel()   # NaN-window pixels: -1
-                if not keep.any():
-                    continue
-                a, e = float(affine[0]), float(affine[4])
-                dd = float(np.sqrt(a * a + e * e))
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                interior = np.zeros((h, w), dtype=bool)
-                interior[1:-1, 1:-1] = True
-                lon = lon[interior.ravel()][keep]
-                lat = lat[interior.ravel()][keep]
-                cell, parent = _encode_points(lon, lat, res, parent_res,
-                                              dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id,
-                                                 cell.shape[0])
-                data["parent"] = parent
-                data["cell"] = cell
-                if keep_pixel:
-                    rr, cc = np.mgrid[1:h - 1, 1:w - 1]
-                    data["pr"] = rr.ravel()[keep]
-                    data["pc"] = cc.ravel()[keep]
-                data["n_ew"] = ew.ravel()[keep]
-                data["n_ns"] = ns.ravel()[keep]
-                data["n_diag"] = dg.ravel()[keep]
-                data["flow_len_m"] = (ew.ravel()[keep] * abs(a)
-                                      + ns.ravel()[keep] * abs(e)
-                                      + dg.ravel()[keep] * dd)
-                buf.append(pd.DataFrame(data))
-                buf_rows += cell.shape[0]
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    return pixel_walk(images, res, parent_res, dggs, fields, kernel,
+                      bands=[band], interior=True,
+                      keep_image_id=keep_image_id)
 
 
 _COMPASS_AZ = {"n": 0.0, "ne": 45.0, "e": 90.0, "se": 135.0,
@@ -1209,65 +828,13 @@ def solar_cells(
     ``(image_id?, parent, cell, cos_inc, shadowed, direct)`` (see
     :func:`solar_scan`) — same narrow no-shuffle decode-path shape as
     the other terrain operators."""
-    from raster2dggs_spark.dggs import check_grid
-    from raster2dggs_spark.operators.indexing import (
-        _decode_rows, _encode_points, _prune, default_parent_res,
-    )
+    def kernel(arr, affine, row):
+        ci, sh, di = solar_scan(arr[0], affine, row.crs, sun_dir,
+                                altitude_deg, s0)
+        return ~np.isnan(ci), {"cos_inc": ci, "shadowed": sh, "direct": di}
 
-    check_grid(dggs)
-    if parent_res is None:
-        parent_res = default_parent_res(res, dggs)
-    fields = ([T.StructField("image_id", T.StringType(), False)]
-              if keep_image_id else [])
-    fields += [
-        T.StructField("parent", T.LongType(), False),
-        T.StructField("cell", T.LongType(), False),
+    return pixel_walk(images, res, parent_res, dggs, [
         T.StructField("cos_inc", T.DoubleType(), True),
         T.StructField("shadowed", T.BooleanType(), False),
         T.StructField("direct", T.DoubleType(), True),
-    ]
-    schema = T.StructType(fields)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from raster2dggs_spark.geo import pixel_centers_lonlat
-
-        buf: list[pd.DataFrame] = []
-        buf_rows = 0
-        for pdf in batches:
-            for row, arr in _decode_rows(pdf, [band]):
-                z = arr[0]
-                h, w = z.shape
-                if h < 3 or w < 3:
-                    continue
-                affine = (row.affine_a, row.affine_b, row.affine_c,
-                          row.affine_d, row.affine_e, row.affine_f)
-                ci, sh, di = solar_scan(z, affine, row.crs, sun_dir,
-                                        altitude_deg, s0)
-                keep = ~np.isnan(ci).ravel()
-                if not keep.any():
-                    continue
-                lon, lat = pixel_centers_lonlat(affine, w, h, row.crs)
-                interior = np.zeros((h, w), dtype=bool)
-                interior[1:-1, 1:-1] = True
-                lon = lon[interior.ravel()][keep]
-                lat = lat[interior.ravel()][keep]
-                cell, parent = _encode_points(lon, lat, res, parent_res,
-                                              dggs)
-                data = {}
-                if keep_image_id:
-                    data["image_id"] = np.repeat(row.image_id,
-                                                 cell.shape[0])
-                data["parent"] = parent
-                data["cell"] = cell
-                data["cos_inc"] = ci.ravel()[keep]
-                data["shadowed"] = sh.ravel()[keep]
-                data["direct"] = di.ravel()[keep]
-                buf.append(pd.DataFrame(data))
-                buf_rows += cell.shape[0]
-                if buf_rows >= 250_000:
-                    yield pd.concat(buf, ignore_index=True)
-                    buf, buf_rows = [], 0
-        if buf:
-            yield pd.concat(buf, ignore_index=True)
-
-    return _prune(images, keep_image_id).mapInPandas(fn, schema)
+    ], kernel, bands=[band], interior=True, keep_image_id=keep_image_id)

@@ -3,6 +3,7 @@
 import numpy as np
 import pandas as pd
 
+from raster2dggs_spark.dggs import cover
 from raster2dggs_spark.dggs import h3lib as h3
 from raster2dggs_spark.dggs import s2lib as s2
 
@@ -49,7 +50,7 @@ def test_cell_area_matches_mean():
 
 
 def test_antimeridian_cover():
-    cells = h3.cover_bbox(176.0, -45.0, 184.0, -40.0, 5)
+    cells = cover.cover_bbox(176.0, -45.0, 184.0, -40.0, 5, "hex7")
     assert len(cells) > 100
     clon, clat = h3.cell_to_latlng(cells)
     # cells on both sides of the wrap, all inside the unwrapped bbox

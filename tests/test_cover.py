@@ -186,8 +186,8 @@ def test_hex7_dense_cover_density_battery():
             lat_min = max(-90, lat0 - h / 2)
             lat_max = min(90, lat0 + h / 2)
             try:
-                got = h3lib.cover_bbox(lon_min, lat_min, lon_max, lat_max,
-                                       res, max_samples=8_000_000)
+                got = cover.cover_bbox(lon_min, lat_min, lon_max, lat_max,
+                                       res, "hex7", max_samples=8_000_000)
             except ValueError:
                 continue
             # 3x denser reference lattice (same filter)

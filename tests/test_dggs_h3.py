@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from raster2dggs_spark.dggs import h3lib as h3
+from raster2dggs_spark.dggs.cover import cover_bbox
 from raster2dggs_spark.geo import haversine_m
 
 R = 6371007.1809
@@ -130,7 +131,7 @@ def test_cover_bbox_complete_against_dense_sampling():
     # center is in the bbox must be in cover_bbox's result
     bbox = (10.0, 45.0, 10.5, 45.4)
     res = 7
-    cover = set(h3.cover_bbox(*bbox, res).tolist())
+    cover = set(cover_bbox(*bbox, res, "hex7").tolist())
     rng = np.random.default_rng(7)
     lon = rng.uniform(bbox[0], bbox[2], 200000)
     lat = rng.uniform(bbox[1], bbox[3], 200000)
@@ -149,10 +150,15 @@ def test_cover_bbox_complete_against_dense_sampling():
     ).all()
 
 
-def test_cover_disk_contains_near_cells():
+def test_cover_disk_contains_near_cells(spark):
+    from raster2dggs_spark.operators.joins import disk_cover_cells
+
     res = 7
     lon0, lat0 = 174.0, -41.0
-    disk = h3.cover_disk(lon0, lat0, 20000.0, res)
+    q = spark.createDataFrame([(0, lon0, lat0)], "q_id long, lon double, lat double")
+    disk = np.array(sorted(r.jcell for r in
+                           disk_cover_cells(q, 20000.0, res).collect()),
+                    dtype=np.int64)
     clon, clat = h3.cell_to_latlng(disk)
     d = haversine_m(np.full_like(clon, lon0), np.full_like(clat, lat0), clon, clat)
     # all cells close to the disk; the query point's own cell is included

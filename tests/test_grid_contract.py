@@ -98,6 +98,24 @@ def test_cell_spans_only_on_fixed_degree_rectangles(dggs):
             cover.cell_spans(res, dggs)
 
 
+def test_lattice_grids_count_their_own_cells():
+    from raster2dggs_spark.functions.resolution import cell_area_m2_mean
+
+    geohash, maidenhead = grid_lib("geohash"), grid_lib("maidenhead")
+    assert [geohash.n_cells(p) for p in (1, 2, 5, 12)] == \
+        [32, 32**2, 32**5, 32**12]
+    assert [maidenhead.n_cells(p) for p in (1, 2, 3)] == \
+        [18**2, 180**2, 4320**2]
+    for dggs in ("geohash", "maidenhead"):
+        lib = grid_lib(dggs)
+        nx, ny = lib.lattice_shape(1)
+        ix, iy = np.meshgrid(np.arange(nx), np.arange(ny), indexing="ij")
+        cells = np.unique(lib.cell_from_indices(ix.ravel(), iy.ravel(), 1))
+        assert cells.size == lib.n_cells(1)
+        assert cell_area_m2_mean(1, dggs) == pytest.approx(
+            lib.cell_area_m2(cells).mean(), rel=1e-12)
+
+
 def test_h3_key_stays_rejected():
     with pytest.raises(ValueError, match="hex7"):
         check_grid("h3")

@@ -671,3 +671,32 @@ def test_solar_wall_casts_shadow():
     # (1000/30 >> tan(40) at every in-tile distance)
     assert sh[:, 1:].all()
     assert (di[:, 1:] == 0).all()
+
+
+def test_solar_cells_spark(spark):
+    import numpy as np
+
+    from raster2dggs_spark.codecs import decode_image
+    from raster2dggs_spark.operators.terrain import solar_cells, solar_scan
+    from raster2dggs_spark.sources.images import (
+        IMAGE_SCHEMA, generate_basin_images_pdf,
+    )
+
+    pdf = generate_basin_images_pdf(3)
+    imgs = spark.createDataFrame(pdf, IMAGE_SCHEMA)
+    out = solar_cells(imgs, sun_dir="w", altitude_deg=40.0, s0=1000.0,
+                      res=7, keep_image_id=True).toPandas()
+    assert list(out.columns) == ["image_id", "parent", "cell", "cos_inc",
+                                 "shadowed", "direct"]
+    for r in pdf.itertuples(index=False):
+        z = decode_image(r.bytes)[0]
+        affine = (r.affine_a, r.affine_b, r.affine_c,
+                  r.affine_d, r.affine_e, r.affine_f)
+        ci, sh, di = solar_scan(z, affine, r.crs, "w", 40.0, 1000.0)
+        ok = ~np.isnan(ci)
+        got = out[out.image_id == r.image_id]
+        # rows are the interior non-NaN pixels, in row-major order
+        assert len(got) == int(ok.sum()) == (r.h - 2) * (r.w - 2)
+        assert np.array_equal(got.cos_inc.to_numpy(), ci[ok])
+        assert np.array_equal(got.shadowed.to_numpy(), sh[ok])
+        assert np.array_equal(got.direct.to_numpy(), di[ok])
